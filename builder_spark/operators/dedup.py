@@ -7,10 +7,28 @@ Scale design (the 100 TB story):
 - minhash LSH: per-doc signature is a single agg over exploded
   shingles (k min-aggregates, map-side combined). Banding turns the
   O(n²) all-pairs problem into |bucket|² within LSH buckets — the only
-  join is on (band_idx, band_hash). Skewed buckets (a shingle set that
-  hashes everywhere) are capped via a bucket-size limit.
+  join is on (band, bucket).
 - jaccard_pairs (exact): common-token join; at scale you run it ONLY
   on LSH candidates, never all pairs.
+
+Candidate generation lives in two shared helpers; every near-duplicate
+operator (MinHash, SimHash, embedding LSH, winnowing, Jaccard and
+containment prefix filters, and the graded banding queries) calls them
+instead of carrying its own copy:
+- :func:`band_rows` explodes per-band bucket expressions into
+  (id, band, bucket) rows; :func:`band_candidates` self-joins them on
+  (band, bucket) into distinct pairs id_a < id_b — the banded-LSH
+  OR-construction.
+- :func:`_rare_prefix` ranks each set's elements rarest-first by global
+  document frequency and keeps the first ``|d| − ⌈τ·|d|⌉ + 1`` — the
+  prefix that any pair scoring ≥ τ must share (SSJoin / PPJoin).
+
+τ slack: every verifier here accepts ``round(score, 4) ≥ τ``, i.e. true
+scores down to τ − 5e-5. A prefix length (or size/positional bound)
+computed from the exact τ can drop a boundary pair that the verifier —
+and an exact all-pairs oracle — keeps, once sets reach ~20k distinct
+elements. So every prefix-filter bound prunes against
+τ − :data:`_TAU_SLACK`; the slack only widens the candidate set.
 
 MinHash here is hand-rolled and fully deterministic: xxhash64 shingle
 hashes + fixed odd multipliers (splitmix64-derived constants), min per
@@ -19,9 +37,7 @@ permutation. No randomness, reproducible across runs/clusters.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from builder_spark.functions.text import tokens, word_shingles
@@ -45,6 +61,10 @@ _MULTS = [
 #: (a_i·x + b_i) mod p. With x,a,b < 2^31 the product stays < 2^62 —
 #: no long overflow under Spark's default ANSI arithmetic.
 _P = 2147483647
+
+#: Prefix-filter threshold slack: the round-4 acceptance granularity
+#: (see the module docstring).
+_TAU_SLACK = 5e-5
 
 
 def _perm_consts(i: int) -> tuple[int, int]:
@@ -169,35 +189,48 @@ def minhash_signatures(
     return sigs.localCheckpoint(eager=True)
 
 
+def band_rows(df: DataFrame, id_col: str, bands: list[Column]) -> DataFrame:
+    """(id, band, bucket) rows, one per input row and band: ``bands[i]``
+    is band i's bucket expression over ``df``'s columns. Only these
+    narrow rows feed the band join — never the signature or vector."""
+    arr = F.array(
+        *[F.struct(F.lit(i).alias("band"), c.alias("bucket")) for i, c in enumerate(bands)]
+    )
+    return df.select(F.col(id_col), F.explode(arr).alias("bb")).select(
+        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+
+
+def band_candidates(df: DataFrame, id_col: str, bands: list[Column]) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) that agree on the bucket
+    of at least one band (see :func:`band_rows`): a self equi-join on
+    (band, bucket), never all-pairs. Pairs agreeing on several bands
+    appear once. ``df`` is scanned once per join side, so callers
+    checkpoint anything expensive (a MapInArrow kernel) first."""
+    rows = band_rows(df, id_col, bands)
+    a = rows.select(F.col(id_col).alias("id_a"), "band", "bucket")
+    b = rows.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    return (
+        a.join(b, ["band", "bucket"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
 def minhash_lsh_candidates(
     sigs: DataFrame, id_col: str, k: int = 16, bands: int = 8
 ) -> DataFrame:
     """Candidate pairs (id_a < id_b) sharing ≥1 LSH band bucket.
 
     rows_per_band = k/bands; band hash = xxhash64 of the band's
-    signature slice. The self-join is on (band, bucket) — the classic
-    LSH trick that avoids all-pairs.
+    signature slice.
     """
     rpb = k // bands
-    band_cols = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[f"sig_{b * rpb + j}" for j in range(rpb)]).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    buckets = sigs.select(
-        F.col(id_col), F.explode(band_cols).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    a = buckets.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b = buckets.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    return band_candidates(
+        sigs,
+        id_col,
+        [F.xxhash64(*[f"sig_{b * rpb + j}" for j in range(rpb)]) for b in range(bands)],
     )
 
 
@@ -210,30 +243,19 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact word-set Jaccard for pairs (id_a < id_b) with sim ≥ threshold.
 
-    With ``candidates`` (e.g. from LSH), ONLY those pairs are scored:
-    the candidate list is joined to per-doc token arrays and the
-    intersection is computed JVM-side with ``array_intersect`` — no
-    token-level explode, no all-pairs work. Cost is O(|candidates| ×
-    avg tokens), the shape that survives 100 TB.
+    With ``candidates`` (e.g. from LSH), ONLY those pairs are scored by
+    :func:`jaccard_from_sets` — no token-level explode, no all-pairs
+    work. Cost is O(|candidates| × avg tokens), the shape that survives
+    100 TB.
 
-    Without candidates, generation falls back to a common-token join
-    (correct but O(sum over tokens of df²) — small corpora / already-
-    blocked partitions only).
+    Without candidates, generation is the complete prefix filter
+    (:func:`prefix_filter_candidates`).
     """
     if candidates is not None:
-        toks = df.select(
-            F.col(id_col).alias("_id"), F.array_distinct(tokens(text_col)).alias("_t")
+        items = df.select(
+            F.col(id_col).alias("_id"), F.array_distinct(tokens(text_col)).alias("_arr")
         )
-        pairs = _pin_pair_parallelism(candidates).join(
-            toks.select(F.col("_id").alias("id_a"), F.col("_t").alias("_ta")), "id_a"
-        ).join(toks.select(F.col("_id").alias("id_b"), F.col("_t").alias("_tb")), "id_b")
-        inter = F.size(F.array_intersect("_ta", "_tb"))
-        union = F.size("_ta") + F.size("_tb") - inter
-        return (
-            pairs.withColumn("jaccard", F.round(inter / union.cast("double"), 4))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
+        return jaccard_from_sets(items, candidates, threshold)
     # spread: tokenization must not serialize on a single-row-group
     # scan; trailing repartition = materialization boundary so the
     # prefix/df/verification consumers share ONE tokenization via
@@ -247,46 +269,35 @@ def jaccard_pairs(
     return jaccard_from_sets(items, cands, threshold)
 
 
-def prefix_filter_candidates(items: DataFrame, tau: float) -> DataFrame:
-    """Complete candidate pairs (id_a < id_b) for Jaccard ≥ tau via
-    PREFIX FILTERING (Chaudhuri et al. SSJoin '06 / Bayardo PPJoin
-    '07): rank each set's elements by global document frequency
-    (rarest first, ties by value) and explode only the first
-    ``|d| − ⌈τ·|d|⌉ + 1`` elements; two sets with Jaccard ≥ τ MUST
-    share a prefix element (J ≥ τ ⇒ overlap ≥ τ·max(|A|,|B|); if the
-    whole prefix missed, overlap ≤ |d| − prefix_len < τ·|d| —
-    contradiction). Input: ``items`` = (_id, _arr) with DISTINCT
-    elements. Output pairs are a strict superset of the true ≥ τ
-    pairs; verify with jaccard_from_sets.
+def _rare_prefix(items: DataFrame, tau: float) -> tuple[DataFrame, DataFrame]:
+    """(tok, prefix) for prefix filtering at threshold ``tau``.
 
-    Scale: this is what replaces the naive common-token join — hot
-    tokens ("the", common 5-grams) sit at the END of the frequency
-    order, so they never enter a prefix unless a doc is almost all
-    hot tokens. Join fan-out collapses from Σ df² over ALL tokens to
-    Σ df_prefix² over rare ones. The ε in the ceil guards against
-    double rounding of τ·|d| shrinking the prefix below completeness.
+    ``tok`` = (_id, _sz, _w): every element of every set in ``items``
+    (_id, _arr with DISTINCT elements), _sz the set size. ``prefix`` =
+    (_id, _sz, _rn, _w): each set's first ``|d| − ⌈τ'·|d|⌉ + 1``
+    elements in rarest-first order (global document frequency, ties by
+    value), _rn the 1-based rank, τ' = τ − _TAU_SLACK (module
+    docstring). The ε in the ceil guards against double rounding of
+    τ'·|d| shrinking the prefix below completeness. Hot elements sit at
+    the end of the order, so they never enter a prefix unless a set is
+    almost all hot elements: the generation join's fan-out is Σ df² over
+    rare elements only.
 
-    τ is SLACKED by the round-4 acceptance granularity before any
-    pruning: the verifier accepts round(J, 4) ≥ τ, i.e. true J down
-    to τ − 0.00005, so every filter here prunes against that relaxed
-    τ — for large sets (≥20k distinct elements) an unslacked prefix
-    length could drop a boundary pair the verifier (and the exact
-    all-pairs oracle) keeps. Slack only WIDENS the candidate set.
-    """
-    tau = tau - 5e-5
+    Explicit pinned (_id) exchange: the window's own hash exchange is
+    byte-tiny, so AQE's byte-based coalescing serializes the ranking
+    AND everything pipelined above it (the pair-generating join + the
+    partial distinct) onto a handful of tasks (measured: one 15-18 s
+    task at sf0.1); REPARTITION_BY_NUM is exempt, satisfies the
+    window's clustering requirement (no second exchange), and scales
+    with the cluster — the same fix as the stitch's (_pid) pin. Second
+    pin on _w: the generation join's streamed side otherwise inherits
+    the coalesced layout."""
+    tau = tau - _TAU_SLACK
     n_pin = items.sparkSession.sparkContext.defaultParallelism
     tok = items.select("_id", F.size("_arr").alias("_sz"), F.explode("_arr").alias("_w"))
     gdf = tok.groupBy("_w").agg(F.count(F.lit(1)).alias("_gdf"))
     w = Window.partitionBy("_id").orderBy(F.col("_gdf").asc(), F.col("_w").asc())
     prefix_len = F.col("_sz") - F.ceil(F.lit(tau) * F.col("_sz") - F.lit(1e-9)) + 1
-    # explicit pinned (_id) exchange: the window's own hash exchange is
-    # byte-tiny, so AQE's byte-based coalescing serializes the ranking
-    # AND everything pipelined above it (the pair-generating join +
-    # the partial distinct) onto a handful of tasks; REPARTITION_BY_NUM
-    # is exempt, satisfies the window's clustering requirement (no
-    # second exchange), and scales with the cluster — the same fix as
-    # the stitch's (_pid) pin. Second pin on _w below: the generation
-    # join's streamed side otherwise inherits the coalesced layout.
     prefix = (
         tok.join(gdf, "_w")
         .repartition(n_pin, F.col("_id"))
@@ -295,6 +306,25 @@ def prefix_filter_candidates(items: DataFrame, tau: float) -> DataFrame:
         .select("_id", "_sz", "_rn", "_w")
         .repartition(n_pin, F.col("_w"))
     )
+    return tok, prefix
+
+
+def prefix_filter_candidates(items: DataFrame, tau: float) -> DataFrame:
+    """Complete candidate pairs (id_a < id_b) for Jaccard ≥ tau via
+    PREFIX FILTERING (Chaudhuri et al. SSJoin '06 / Bayardo PPJoin
+    '07): two sets with Jaccard ≥ τ MUST share an element of their
+    :func:`_rare_prefix` (J ≥ τ ⇒ overlap ≥ τ·max(|A|,|B|); if the
+    whole prefix missed, overlap ≤ |d| − prefix_len < τ·|d| —
+    contradiction). Input: ``items`` = (_id, _arr) with DISTINCT
+    elements. Output pairs are a strict superset of the true ≥ τ
+    pairs; verify with jaccard_from_sets.
+
+    Scale: this is what replaces the naive common-token join — join
+    fan-out collapses from Σ df² over ALL tokens to Σ df_prefix² over
+    rare ones.
+    """
+    _, prefix = _rare_prefix(items, tau)
+    tau = tau - _TAU_SLACK  # the bounds below prune on the same slacked τ
     a = prefix.select(
         F.col("_id").alias("id_a"), F.col("_sz").alias("_sza"), F.col("_rn").alias("_rna"), "_w"
     )
@@ -368,12 +398,10 @@ def jaccard_from_sets(
     # |A∩B| ≥ τ·max(|A|,|B|) and |A∩B| ≤ min(|A|,|B|), hence
     # min ≥ τ·max — a candidate whose sizes are more than 1/τ apart
     # cannot qualify and skips the O(set size) intersection entirely.
-    # τ is slacked by the round-4 granularity: the FINAL filter accepts
-    # round(J, 4) ≥ τ, i.e. true J down to τ − 0.00005 — the size bound
-    # must not drop those boundary pairs. Doubled slack (1e-4, vs the
-    # 5e-5 the acceptance needs) because this is a PRUNING-only filter:
-    # it removes the 1-ulp FP edge when min equals (τ−5e-5)·max exactly,
-    # at the cost of a few extra candidates reaching the exact check.
+    # τ is slacked (module docstring), doubled to 1e-4 because this is
+    # a PRUNING-only filter: it removes the 1-ulp FP edge when min
+    # equals (τ−5e-5)·max exactly, at the cost of a few extra
+    # candidates reaching the exact check.
     sa, sb = F.size("_ta"), F.size("_tb")
     pairs = pairs.filter(
         F.least(sa, sb).cast("double") >= F.lit(threshold - 1e-4) * F.greatest(sa, sb)
@@ -555,31 +583,23 @@ def simhash_near_dupes(
     """
     rpb = bits // bands
     mask = (1 << rpb) - 1
-    # checkpoint (r15): the band self-join consumes sigs twice and
-    # ReusedExchange never fires above the signature kernel's
-    # MapInArrow — one kernel run, one long per doc
+    # checkpoint (r15): the band self-join and the two signature
+    # rejoins consume sigs, and ReusedExchange never fires above the
+    # signature kernel's MapInArrow — one kernel run, one long per doc
     sigs = simhash_signatures(df, id_col, text_col, bits=bits).localCheckpoint(
         eager=True
     )
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright("simhash", b * rpb).bitwiseAND(F.lit(mask)).alias("val"),
-            )
-            for b in range(bands)
-        ]
+    cand = band_candidates(
+        sigs,
+        id_col,
+        [F.shiftright("simhash", b * rpb).bitwiseAND(F.lit(mask)) for b in range(bands)],
     )
-    buckets = sigs.select(id_col, "simhash", F.explode(band_arr).alias("bb")).select(
-        id_col, "simhash", F.col("bb.band").alias("band"), F.col("bb.val").alias("val")
-    )
-    a = buckets.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("_sa"), "band", "val")
-    b = buckets.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("_sb"), "band", "val")
+    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("_sa"))
+    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("_sb"))
     return (
-        a.join(b, ["band", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
         .select("id_a", "id_b", F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).alias("hamming"))
-        .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -700,27 +720,10 @@ def winnow_containment_pairs(
     # prefix×full in one direction + unordered normalization covers
     # both assignments. Complete for containment ≥ c; hot fingerprints
     # never enter a prefix, so no quadratic fan-out.
-    n_pin = items.sparkSession.sparkContext.defaultParallelism
-    tok = items.select("_id", F.size("_arr").alias("_sz"), F.explode("_arr").alias("_w"))
-    gdf = tok.groupBy("_w").agg(F.count(F.lit(1)).alias("_gdf"))
-    rank_w = Window.partitionBy("_id").orderBy(F.col("_gdf").asc(), F.col("_w").asc())
-    prefix_len = (
-        F.col("_sz") - F.ceil(F.lit(min_containment) * F.col("_sz") - F.lit(1e-9)) + 1
-    )
-    # pinned (_id) + (_w) exchanges: see prefix_filter_candidates — the
-    # byte-tiny window exchange otherwise coalesces, serializing the
-    # rank, the generation join and the partial distinct pipelined
-    # above it (measured: one 15 s task at sf0.1)
-    prefix = (
-        tok.join(gdf, "_w")
-        .repartition(n_pin, F.col("_id"))
-        .withColumn("_rn", F.row_number().over(rank_w))
-        .filter(F.col("_rn") <= prefix_len)
-        .select(F.col("_id").alias("_pid"), "_w")
-        .repartition(n_pin, F.col("_w"))
-    )
+    tok, prefix = _rare_prefix(items, min_containment)
     cands = (
-        prefix.join(tok.select(F.col("_id").alias("_fid"), "_w"), "_w")
+        prefix.select(F.col("_id").alias("_pid"), "_w")
+        .join(tok.select(F.col("_id").alias("_fid"), "_w"), "_w")
         .filter(F.col("_pid") != F.col("_fid"))
         .select(
             F.least("_pid", "_fid").alias("id_a"),
@@ -749,19 +752,25 @@ def winnow_containment_pairs(
     )
 
 
+#: Largest node count whose label table :func:`dedup_clusters`
+#: broadcasts into each propagation round (≈ 320 MB framed).
+CLUSTER_BCAST_MAX = 20_000_000
+
+
 def _propagation_round(bi: DataFrame, labels: DataFrame, broadcastable: bool) -> DataFrame:
     """One min-label propagation round: labels flow across the (already
-    bidirectional) edge table, every node keeps the minimum seen. With
+    bidirectional) edge table, every node keeps the minimum seen. ``bi``
+    carries one self-loop per node, so a node's own label reaches it
+    over the same join and ``labels`` is read exactly once — the round's
+    lineage extends the previous round's instead of doubling it. With
     ``broadcastable`` the node-grain label table ships map-side and the
     edge table is never exchanged (scanned straight from its
     checkpoint); the label aggregate's map-side partials compress the
     per-round shuffle to node grain."""
     lab = F.broadcast(labels) if broadcastable else labels
-    msgs = bi.join(lab, bi.v == lab.node).select(F.col("u").alias("node"), F.col("label"))
     return (
-        labels.select("node", "label")
-        .union(msgs)
-        .groupBy("node")
+        bi.join(lab, bi.v == lab.node)
+        .groupBy(F.col("u").alias("node"))
         .agg(F.min("label").alias("label"))
     )
 
@@ -784,10 +793,13 @@ def dedup_clusters(
 
     Lineage discipline (CRITICAL for iteration): each round's labels are
     `localCheckpoint()`ed — persist alone keeps the full logical plan,
-    which doubles per round until Catalyst's plan-string rendering (and
+    which grows every round until Catalyst's plan-string rendering (and
     eventually the optimizer itself) blows up. Checkpointing truncates
-    the plan so every round optimizes a constant-size query. On a real
-    cluster, swap `localCheckpoint` for `checkpoint` with a durable
+    the plan so every round optimizes a constant-size query; the
+    self-loop edges keep the growth linear even where checkpoints are
+    elided (the plan audits in tools/window_audit.py walk the full
+    lineage; reading the label table twice per round doubled it). On a
+    real cluster, swap `localCheckpoint` for `checkpoint` with a durable
     `spark.sparkContext.setCheckpointDir` so executor loss can't lose
     intermediate state. This is the iterative-algorithm escape hatch:
     Spark has no recursive CTE, so the DRIVER loops while every round
@@ -801,22 +813,23 @@ def dedup_clusters(
     exchanged at all (scanned from its checkpoint, joined map-side),
     and the only per-round shuffle is the label aggregate, which
     map-side partial aggregation compresses to node grain. Guarded by
-    SPARK_GRAFT_CLUSTER_BCAST_MAX (default 20M nodes ≈ 320 MB framed,
-    well under the 8 GB / 512M-row broadcast cap): above it, fall back
+    :data:`CLUSTER_BCAST_MAX` (20M nodes ≈ 320 MB framed, well under
+    the 8 GB / 512M-row broadcast cap): above it, fall back
     to the shuffle join — at that scale co-partitioning via a bucketed
     staging table is the production answer (SCALE.md).
     """
     edges = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     bi = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    bi = bi.localCheckpoint(eager=True)
+    loops = bi.select("u").distinct().select("u", F.col("u").alias("v"))
+    bi = bi.union(loops).localCheckpoint(eager=True)
     labels = (
-        bi.select(F.col("u").alias("node"))
+        bi.filter(F.col("u") == F.col("v"))
+        .select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    bcast_max = int(os.environ.get("SPARK_GRAFT_CLUSTER_BCAST_MAX", 20_000_000))
-    broadcastable = labels.count() <= bcast_max
+    broadcastable = labels.count() <= CLUSTER_BCAST_MAX
     for _ in range(max_iter):
         new_labels = _propagation_round(bi, labels, broadcastable).localCheckpoint(
             eager=True
@@ -859,32 +872,14 @@ def containment_pairs(items: DataFrame, tau: float) -> DataFrame:
     token set, overlap ≤ ⌈τ|A|⌉ − 1 < τ·|A| — impossible. Only the
     smaller side's prefix enters the join (against the full token
     stream); prefix tokens are globally rare by construction, so the
-    fan-out is Σ df(rare) — no hot-token blowup, no all-pairs. τ is
-    slacked by the round-4 acceptance granularity (τ − 5e-5), same
-    discipline as :func:`prefix_filter_candidates`. Verification is
-    exact ``array_intersect`` on candidates only.
+    fan-out is Σ df(rare) — no hot-token blowup, no all-pairs
+    (:func:`_rare_prefix`). Verification is exact ``array_intersect``
+    on candidates only.
 
     ``items`` = (_id, _arr) with DISTINCT elements (same contract as
     :func:`prefix_filter_candidates`).
     """
-    tau_eff = tau - 5e-5
-    n_pin = items.sparkSession.sparkContext.defaultParallelism
-    tok = items.select("_id", F.size("_arr").alias("_sz"), F.explode("_arr").alias("_w"))
-    gdf = tok.groupBy("_w").agg(F.count(F.lit(1)).alias("_gdf"))
-    w = Window.partitionBy("_id").orderBy(F.col("_gdf").asc(), F.col("_w").asc())
-    prefix_len = F.col("_sz") - F.ceil(F.lit(tau_eff) * F.col("_sz") - F.lit(1e-9)) + 1
-    # pinned (_id) + (_w) exchanges: see prefix_filter_candidates — the
-    # byte-tiny window exchange otherwise coalesces, serializing the
-    # rank, the generation join and the partial distinct pipelined
-    # above it (measured: one 15-18 s task at sf0.1)
-    prefix = (
-        tok.join(gdf, "_w")
-        .repartition(n_pin, F.col("_id"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= prefix_len)
-        .select("_id", "_sz", "_w")
-        .repartition(n_pin, F.col("_w"))
-    )
+    tok, prefix = _rare_prefix(items, tau)
     full = tok.select(F.col("_id").alias("_idf"), F.col("_sz").alias("_szf"), "_w")
     cand = (
         prefix.join(full, "_w")

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from builder_spark.functions.vectors import dot_f64, l2_norm
+from builder_spark.operators.dedup import band_candidates
 
 
 def brute_force_topk(
@@ -149,12 +150,13 @@ def _lsh_buckets_gen(planes: list[list[float]], n_bands: int, vec_name: str):
             n = len(col)
             buckets = np.zeros((n, n_bands), np.int64)
             if n:
-                widths = np.zeros(n, np.int64)
-                if col.null_count == 0:
-                    lv = col.cast(pa.list_(pa.float64()))
-                    offs = np.asarray(lv.offsets, dtype=np.int64)
-                    widths = np.diff(offs)
-                good = np.nonzero(widths == dim)[0]
+                lv = col.cast(pa.list_(pa.float64()))
+                offs = np.asarray(lv.offsets, dtype=np.int64)
+                widths = np.diff(offs)
+                # a null row's offsets may span any width: the validity
+                # mask, not the width, makes it degenerate
+                valid = np.asarray(lv.is_valid())
+                good = np.nonzero((widths == dim) & valid)[0]
                 if good.size:
                     flat = np.asarray(lv.values, dtype=np.float64)
                     if lv.values.null_count:
@@ -452,25 +454,7 @@ def embedding_near_dupes_lsh(
     bk = with_lsh_buckets(
         df.select(F.col(id_col), F.col(vec_col)), planes, n_bands, vec_col
     ).drop(vec_col).localCheckpoint(eager=True)
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"), F.col(f"_b{i}").alias("bucket")
-            )
-            for i in range(n_bands)
-        ]
-    )
-    buckets = bk.select(F.col(id_col), F.explode(band_arr).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    a = buckets.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b = buckets.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cand = band_candidates(bk, id_col, [F.col(f"_b{i}") for i in range(n_bands)])
     n = df.select(F.col(id_col), F.col(vec_col), l2_norm(vec_col).alias("_nrm"))
     scored = cand.join(
         n.select(
@@ -486,37 +470,6 @@ def embedding_near_dupes_lsh(
     sim = dot_f64("_ea", "_eb") / (F.col("_na") * F.col("_nb"))
     return (
         scored.withColumn("cos_sim", F.round(sim, 4))
-        .filter(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "cos_sim")
-    )
-
-
-def embedding_near_dupes(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.3,
-) -> DataFrame:
-    """All pairs (a < b) with cosine ≥ threshold — brute force with
-    norms precomputed once per side. O(n²): small corpora / already-
-    blocked partitions only; the graded scale path is
-    embedding_near_dupes_lsh.
-    """
-    n = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        l2_norm(vec_col).alias("_nrm"),
-    )
-    a = n.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_ea"), F.col("_nrm").alias("_na")
-    )
-    b = n.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_eb"), F.col("_nrm").alias("_nb")
-    )
-    sim = dot_f64("_ea", "_eb") / (F.col("_na") * F.col("_nb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", F.round(sim, 4))
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )

@@ -2125,8 +2125,8 @@ def q_vocab_drift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # LSH band-bucket occupancy (capacity-planning diagnostic)
 
-from builder_spark.operators.dedup import CHARFOLD_MOD  # noqa: E402
-from builder_spark.queries.textops import _A, _B, _BANDS, _K, _P  # noqa: E402
+from builder_spark.operators.dedup import CHARFOLD_MOD, band_rows  # noqa: E402
+from builder_spark.queries.textops import _A, _B, _BANDS, _K, _P, _band_buckets  # noqa: E402
 
 
 def _band_occupancy_oracle() -> str:
@@ -2214,19 +2214,8 @@ def q_band_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .mapInArrow(charfold_sig_gen(3, _A, _B, _P, "doc_id"), _sig_schema)
     )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                (F.col(f"s{2 * b}") * F.lit(_P) + F.col(f"s{2 * b + 1}")).alias("val"),
-            )
-            for b in range(_BANDS)
-        ]
-    )
-    bk = sig.select("doc_id", F.explode(bands).alias("bv")).select(
-        "doc_id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val")
-    )
-    bucket = bk.groupBy("band", "val").agg(F.count(F.lit(1)).alias("c"))
+    bk = band_rows(sig, "doc_id", _band_buckets())
+    bucket = bk.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("c"))
     c = F.col("c")
     return (
         bucket.groupBy("band")

@@ -20,13 +20,14 @@ once and windows over |lang|×|vocab| rows only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from builder_spark.catalog import load_table
 from builder_spark.functions.hashing import knuth_bucket
 from builder_spark.operators.dedup import (
     CHARFOLD_MOD,
+    band_candidates,
     charfold_hash,
 )
 from builder_spark.operators.topk import grouped_topk
@@ -72,6 +73,12 @@ _B = [7, 131, 523, 1031, 2053, 4099, 8209, 16411]
 _K = len(_A)
 _BANDS = 4  # 2 rows per band
 _MIN_MATCH = 3  # report pairs with >= 3/8 matching signature slots
+
+
+def _band_buckets() -> list[Column]:
+    """Per-band bucket of the graded MinHash banding: band b packs its
+    two signature slots s{2b}, s{2b+1} (each < P) into one long."""
+    return [F.col(f"s{2 * b}") * F.lit(_P) + F.col(f"s{2 * b + 1}") for b in range(_BANDS)]
 
 
 def _minhash_oracle() -> str:
@@ -137,12 +144,9 @@ def q_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     permutation minima per batch — operators/arrowkern.py; values
     bit-identical to the old array_min/transform expression form,
     which interpreted one lambda per shingle×permutation) →
-    band-explode (4 rows/doc) → self-equi-join on (band, val) →
-    distinct pairs → signature rejoin. No O(n²) stage anywhere.
-    repartition = materialization boundary: the band self-join and
-    the two signature rejoins would otherwise re-run the whole
-    signature stage once per consumer (see
-    operators/dedup.py::minhash_signatures)."""
+    ``band_candidates`` (band-explode to 4 rows/doc, self-equi-join on
+    (band, bucket), distinct pairs) → signature rejoin. No O(n²) stage
+    anywhere."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from builder_spark.operators.arrowkern import charfold_sig_gen
@@ -169,30 +173,7 @@ def q_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         # signature rejoins x/y). One kernel run, 8 longs per doc.
         .localCheckpoint(eager=True)
     )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                (F.col(f"s{2 * b}") * F.lit(_P) + F.col(f"s{2 * b + 1}")).alias("val"),
-            )
-            for b in range(_BANDS)
-        ]
-    )
-    bk = sig.select("doc_id", F.explode(bands).alias("bv")).select(
-        "doc_id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val")
-    )
-    a = bk.alias("a")
-    b = bk.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
+    pairs = band_candidates(sig, "doc_id", _band_buckets())
     x = sig.alias("x")
     y = sig.alias("y")
     n_match = sum(

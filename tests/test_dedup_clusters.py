@@ -24,7 +24,9 @@ def _bi(spark):
     )
     edges = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     bi = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    return bi.localCheckpoint(eager=True)
+    # one self-loop per node, as dedup_clusters builds it
+    loops = bi.select("u").distinct().select("u", F.col("u").alias("v"))
+    return bi.union(loops).localCheckpoint(eager=True)
 
 
 def test_round_broadcasts_labels_and_never_shuffles_edges(spark):
