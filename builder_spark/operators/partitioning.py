@@ -18,11 +18,13 @@ Two distinct scale problems live here:
    replicate the small side once per salt bucket. AQE's skew-join
    splitting handles sort-merge joins automatically; salting is for
    aggregations and for joins AQE can't split (e.g. bucketed tables).
+
+It also holds the package's one checkpoint policy (``materialize`` /
+``release``): every operator and query that hands one intermediate to
+several consumers, or loops over one, stores it through these two.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -85,6 +87,44 @@ def partition_report(df: DataFrame) -> dict[str, int]:
     """Partition-count diagnostic (triggers partition planning, cheap)."""
     n = df.rdd.getNumPartitions()
     return {"num_partitions": n, "default_parallelism": df.sparkSession.sparkContext.defaultParallelism}
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Run ``df`` now and return a frame that reads the stored rows.
+
+    This is the only checkpoint call in the package; the trade-off is:
+
+    - the input runs ONCE and its lineage is cut, so every consumer
+      (and every round of a driver loop) plans a constant-size query
+      over the stored rows instead of re-running the input;
+    - partitioning is discarded: a join or aggregate downstream
+      shuffles the rows again, even on the key they were hashed by;
+    - the blocks live in executor storage (``localCheckpoint``), so an
+      executor loss loses them and the next action on the frame fails.
+      On a real cluster the fix is to switch this one line to a
+      reliable ``checkpoint`` with ``SparkContext.setCheckpointDir``;
+    - ``mapInArrow`` kernel outputs with more than one consumer need
+      it: ReusedExchange never fires above a MapInArrow node (the
+      embedded Python function defeats canonical subtree equality), so
+      a repartition boundary re-runs the kernel once per consumer.
+
+    The blocks stay pinned until :func:`release`.
+    """
+    return df.localCheckpoint(eager=True)
+
+
+def release(df: DataFrame) -> None:
+    """Drop the stored blocks behind a :func:`materialize` result, for
+    state a long-lived session no longer needs (superseded rounds of a
+    driver loop). Any later action on ``df``, or on a frame built from
+    it, fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
+
+    No-op when ``df`` is not a checkpoint scan — e.g. under
+    ``tools/window_audit.checkpoints_disabled()``, where checkpointing
+    is the identity and ``df`` is still the full plan."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def _simple_order(c: str | Column) -> tuple[str, bool] | None:
@@ -180,78 +220,24 @@ def _sampled_literal_cuts(df: DataFrame, col: str, n_cuts: int) -> list:
 #: partitions, never corrupt values. Bounded; repeated constructions of
 #: the same query (warm benches, interactive sessions) skip the
 #: approxQuantile action entirely.
-_BOUNDARY_MEMO: dict[tuple[int, str, int], list] = {}
-
-
-def _boundary_cache_path() -> str:
-    """Per-user cache path: a fixed shared-tempdir filename would let
-    another local user pre-plant a symlink (open(tmp,'w') clobbers the
-    target), poison the JSON, or own the file so this user's writes
-    fail silently forever — suffix the uid so each user gets their own
-    file (correctness is cut-independent either way; this is hygiene)."""
-    import tempfile
-
-    uid = os.getuid() if hasattr(os, "getuid") else "na"
-    return os.path.join(tempfile.gettempdir(), f"builder_spark_boundaries_{uid}.json")
+_BOUNDARY_MEMO: dict[tuple[str, int, str, int], list] = {}
 
 
 def _memo_cuts(df: DataFrame, col: str, n_cuts: int, compute, kind: str = "num") -> list:
-    """Cut memoization shared by the numeric (approxQuantile) and
-    string (sampled-literal) boundary modes: in-process dict AND a
-    tmp-file cache keyed by the plan's semantic hash — a fresh process
-    (cold bench, new driver run) then skips the boundary job for plans
-    it has seen before. A stale entry is SAFE by design: cuts only
-    place the partition boundaries, and the stitch's offsets make the
-    RESULT independent of where they fall — the worst a stale file can
-    do is unbalance partitions."""
-    import json
-
+    """In-process cut memoization shared by the numeric (approxQuantile)
+    and string (sampled-literal) boundary modes, keyed by the plan's
+    semantic hash (see :data:`_BOUNDARY_MEMO` for why a stale entry is
+    safe)."""
     try:
         key = (kind, df.semanticHash(), col, n_cuts)
     except Exception:  # noqa: BLE001 - hashing is an optimization only
-        key = None
-    if key is not None and key in _BOUNDARY_MEMO:
+        return compute()
+    if key in _BOUNDARY_MEMO:
         return _BOUNDARY_MEMO[key]
-    fkey = ":".join(map(str, key)) if key is not None else None
-    disk: dict = {}
-    if fkey is not None:
-        try:
-            with open(_boundary_cache_path()) as f:
-                disk = json.load(f)
-        except (OSError, ValueError):
-            disk = {}
-        if fkey in disk:
-            b = disk[fkey]
-            _BOUNDARY_MEMO[key] = b
-            return b
     b = compute()
-    if key is not None:
-        if len(_BOUNDARY_MEMO) >= 256:
-            _BOUNDARY_MEMO.clear()
-        _BOUNDARY_MEMO[key] = b
-        try:
-            if len(disk) >= 256:
-                disk = {}
-            disk[fkey] = b
-            # mkstemp (0600, O_EXCL) + os.replace: never follows a
-            # pre-planted symlink at a predictable .tmp name, and the
-            # rename keeps readers atomic
-            import tempfile as _tf
-
-            target = _boundary_cache_path()
-            fd, tmp = _tf.mkstemp(
-                dir=os.path.dirname(target), prefix=os.path.basename(target) + "."
-            )
-            try:
-                with os.fdopen(fd, "w") as f:
-                    json.dump(disk, f)
-                os.replace(tmp, target)
-            except BaseException:
-                with __import__("contextlib").suppress(OSError):
-                    os.remove(tmp)
-                raise
-        except OSError:
-            pass
+    if len(_BOUNDARY_MEMO) >= 256:
+        _BOUNDARY_MEMO.clear()
+    _BOUNDARY_MEMO[key] = b
     return b
 
 
@@ -260,7 +246,7 @@ def _memo_boundaries(df: DataFrame, col: str, n_cuts: int) -> list:
     return _memo_cuts(df, col, n_cuts, lambda: df.approxQuantile(col, probs, 0.01))
 
 
-def _pid_case_sql(enc_sql: str, null_sql: str, cuts: list, asc: bool) -> Column:
+def _pid_case_sql(enc_sql: str, cuts: list, asc: bool) -> Column:
     """pid = count of boundaries passed by the (encoded) first order
     column, evaluated as a BINARY-SEARCH nested CASE: each row pays
     ``ceil(log2(k))`` comparisons instead of the k of a linear
@@ -279,8 +265,7 @@ def _pid_case_sql(enc_sql: str, null_sql: str, cuts: list, asc: bool) -> Column:
     exactly where ASC NULLS FIRST sorts them. DESC: pid =
     len(cuts) - bisect_left(cuts, v); NULLs again fall through every
     ELSE to pid len(cuts), the final partition, matching DESC NULLS
-    LAST. ``null_sql`` is retained for signature stability (the
-    fall-through handles NULL placement in both directions)."""
+    LAST."""
     cuts = sorted(set(cuts))
 
     def go(lo: int, hi: int) -> str:
@@ -423,7 +408,7 @@ def stitched_running(
                 "explicit boundaries need a bare first order column "
                 "(ASC or DESC, default null ordering)"
             )
-        pid = _pid_case_sql(f"`{simple[0]}`", f"`{simple[0]}`", boundaries, simple[1])
+        pid = _pid_case_sql(f"`{simple[0]}`", boundaries, simple[1])
     elif simple is not None:
         first, asc = simple
         enc = _numeric_encoding_sql(df, first)
@@ -439,7 +424,7 @@ def stitched_running(
                 cuts = _memo_boundaries(
                     df.select(F.expr(enc).alias("_enc")), "_enc", 4 * num_partitions
                 )
-            pid = _pid_case_sql(enc, f"`{first}`", cuts, asc)
+            pid = _pid_case_sql(enc, cuts, asc)
         elif dict(df.dtypes).get(first, "") == "string":
             # strings have no approxQuantile: bounded deterministic
             # sample → driver-sorted literal cuts (same monotone-pid

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from builder_spark.functions.vectors import dot_f64, l2_norm
 from builder_spark.operators.dedup import band_candidates
+from builder_spark.operators.partitioning import materialize
 
 
 def brute_force_topk(
@@ -447,13 +448,12 @@ def embedding_near_dupes_lsh(
     both engines miss the same pairs — graded parity holds.
     """
     planes = planes or hyperplanes(dim=64, n_planes=16, seed=7)
-    # checkpoint (r15): the (band, bucket) self-join consumes the
-    # bucket table twice and ReusedExchange never fires above the
-    # kernel's MapInArrow — one kernel run (and one embedding scan),
-    # n_bands longs per vector
-    bk = with_lsh_buckets(
+    # the (band, bucket) self-join consumes the bucket kernel's output
+    # twice; one kernel run (and one embedding scan), n_bands longs per
+    # vector
+    bk = materialize(with_lsh_buckets(
         df.select(F.col(id_col), F.col(vec_col)), planes, n_bands, vec_col
-    ).drop(vec_col).localCheckpoint(eager=True)
+    ).drop(vec_col))
     cand = band_candidates(bk, id_col, [F.col(f"_b{i}") for i in range(n_bands)])
     n = df.select(F.col(id_col), F.col(vec_col), l2_norm(vec_col).alias("_nrm"))
     scored = cand.join(

@@ -72,6 +72,12 @@ class ConcurrentWriteError(RuntimeError):
 # GlobLocalFileSystemTarget)
 
 
+def _has_output(entries) -> bool:
+    """A directory listing holds a finished output: a ``_SUCCESS``
+    marker or any parquet/csv/json data file."""
+    return any(e == "_SUCCESS" or e.endswith((".parquet", ".csv", ".json")) for e in entries)
+
+
 @dataclass(frozen=True)
 class Target:
     """An artifact with identity and freshness.
@@ -93,14 +99,7 @@ class Target:
     @property
     def exists(self) -> bool:
         for p in self._paths():
-            if os.path.isdir(p):
-                entries = os.listdir(p)
-                if "_SUCCESS" in entries or any(
-                    e.endswith(".parquet") or e.endswith(".csv") or e.endswith(".json")
-                    for e in entries
-                ):
-                    return True
-            else:
+            if not os.path.isdir(p) or _has_output(os.listdir(p)):
                 return True
         return False
 
@@ -167,14 +166,9 @@ class ObjectStoreTarget(Target):
     def exists(self) -> bool:
         sts, fs = self._statuses()
         for st in sts:
-            if st.isDirectory():
-                entries = [f.getPath().getName() for f in fs.listStatus(st.getPath())]
-                if "_SUCCESS" in entries or any(
-                    e.endswith(".parquet") or e.endswith(".csv") or e.endswith(".json")
-                    for e in entries
-                ):
-                    return True
-            else:
+            if not st.isDirectory() or _has_output(
+                f.getPath().getName() for f in fs.listStatus(st.getPath())
+            ):
                 return True
         return False
 
@@ -311,12 +305,6 @@ class VersionedTableTarget(Target):
             self.table_path,
             f"data-v{(self.get_version() or 0) + 1:08d}-{uuid.uuid4().hex[:8]}",
         )
-
-    def next_data_path(self) -> str:
-        """Back-compat alias for :meth:`stage_data_path` (kept because
-        early callers used this name; it has the same uniqueness
-        guarantee now)."""
-        return self.stage_data_path()
 
     def commit(
         self,
@@ -687,11 +675,14 @@ class BuildManager:
         return deco
 
     def _producers(self, pattern: str) -> list[Job]:
+        """Jobs whose targets pattern equals ``pattern`` or globs it. No
+        substring match: ``/x/b/%Y%m%d`` is a prefix of
+        ``/x/b/%Y%m%d_raw`` yet does not produce it."""
         return [
             j
             for j in self.jobs.values()
             if j.targets
-            and (j.targets == pattern or fnmatch.fnmatch(pattern, j.targets) or j.targets in pattern)
+            and (j.targets == pattern or fnmatch.fnmatch(pattern, j.targets))
         ]
 
     def expand(self, start: datetime, end: datetime) -> "BuildGraph":
@@ -869,7 +860,8 @@ class ExecutionManager:
         clock: Callable[[], float] = time.time,
     ) -> None:
         """``state_path``: optional JSONL run journal — every job
-        outcome (unique_id, status, ts, duration) appends one line, so
+        outcome (unique_id, status, ts, duration, and for a failure the
+        last attempt's ``error``) appends one line, so
         job state PERSISTS ACROSS RUNS (scheduler restarts, cron
         re-invocations). ``failure_backoff``: with a journal, a job
         whose most recent journal outcome is a FAILURE within this
@@ -890,6 +882,10 @@ class ExecutionManager:
         self.manager = manager
         self.executor = executor
         self.results: dict[str, str] = {}
+        #: unique_id → "<ExceptionType>: <message>" of a failed job's
+        #: last attempt (the journal line carries the same string);
+        #: written by the job's own worker, one key per job
+        self.errors: dict[str, str] = {}
         self.state_path = state_path
         self.clock = clock
         self.failure_backoff = (
@@ -924,24 +920,24 @@ class ExecutionManager:
             last[entry.get("unique_id", "")] = entry
         return last
 
-    def _journal(self, unique_id: str, status: str, now: float, duration: float) -> None:
+    def _journal(
+        self, unique_id: str, status: str, now: float, duration: float, error: str | None = None
+    ) -> None:
         import json
 
         if not self.state_path:
             return
+        entry = {
+            "unique_id": unique_id,
+            "status": status,
+            "ts": now,
+            "duration_s": round(duration, 3),
+        }
+        if error is not None:
+            entry["error"] = error
         try:
             with open(self.state_path, "a") as f:
-                f.write(
-                    json.dumps(
-                        {
-                            "unique_id": unique_id,
-                            "status": status,
-                            "ts": now,
-                            "duration_s": round(duration, 3),
-                        }
-                    )
-                    + "\n"
-                )
+                f.write(json.dumps(entry) + "\n")
         except OSError:
             pass  # journaling must never fail the build
 
@@ -977,13 +973,16 @@ class ExecutionManager:
         while True:
             try:
                 self.executor.execute(cj)
+                self.errors.pop(cj.unique_id, None)
                 self._journal(cj.unique_id, "ran", self.clock(), time.time() - t0)
                 return "ran"
-            except Exception:
+            except Exception as e:
                 attempts += 1
                 if attempts > cj.job.retries:
+                    error = f"{type(e).__name__}: {e}"
+                    self.errors[cj.unique_id] = error
                     self._journal(
-                        cj.unique_id, "failed", self.clock(), time.time() - t0
+                        cj.unique_id, "failed", self.clock(), time.time() - t0, error
                     )
                     return "failed"
 

@@ -22,6 +22,7 @@ from builder_spark.operators.dedup import (
     simhash_near_dupes,
 )
 from builder_spark.operators.multimodal import attach_binary, extract_payload_features
+from builder_spark.operators.partitioning import materialize
 from builder_spark.operators.similarity import hyperplanes, lsh_bucketed_topk
 from builder_spark.operators.topk import grouped_topk
 from builder_spark.registry import QUERIES, register
@@ -556,17 +557,14 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # r15: decode+fold+distinct runs as ONE numpy mapInArrow kernel
     # (the materialized-codepoint expression form still walked an
-    # interpreted lambda per character). localCheckpoint, not a
-    # repartition reuse-boundary: prefix candidates, document
-    # frequencies, and both verification rejoins all consume `items`,
-    # and ReusedExchange never fires above MapInArrow (Python functions
-    # defeat canonical subtree equality — the exchange form re-ran the
-    # gram kernel SIX times here). One kernel run, ~200 longs per doc.
-    items = (
+    # interpreted lambda per character). Prefix candidates, document
+    # frequencies, and both verification rejoins all consume `items`
+    # (a repartition boundary re-ran the gram kernel SIX times here);
+    # materialized, one kernel run, ~200 longs per doc.
+    items = materialize(
         spread(d, "doc_id")
         .select(F.col("doc_id").alias("_id"), "text")
         .mapInArrow(char_gram_items_gen(5, "_id"), "_id long, _arr array<long>")
-        .localCheckpoint(eager=True)
     )
     cands = prefix_filter_candidates(items, 0.8)
     return jaccard_from_sets(items, cands, 0.8)

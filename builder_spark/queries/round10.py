@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from builder_spark.catalog import load_table
+from builder_spark.operators.partitioning import materialize
 from builder_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -1604,7 +1605,7 @@ def q_gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the fitted 1-row parameter vector ONCE: it feeds both
     # the loglik scan and the output row, and without the checkpoint the
     # whole EM lineage would be planned (and its shuffles paid) twice
-    params = params.localCheckpoint(eager=True)
+    params = materialize(params)
     jf = pts.crossJoin(F.broadcast(params))
     mix = (1 - F.col("pi2")) * dens("mu1", "sg1") + F.col("pi2") * dens("mu2", "sg2")
     # params ride the 1-row broadcast (NOT max() over jf): an empty
@@ -6034,7 +6035,7 @@ def q_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONCE: both the ssb scan and the output row consume it, and
     # without the checkpoint its lineage is planned (shuffles paid)
     # twice.
-    tot = tot.localCheckpoint(eager=True)
+    tot = materialize(tot)
     sums = g.crossJoin(F.broadcast(tot)).agg(
         F.sum(F.col("n") * (F.col("m") - F.col("gm")) ** 2).alias("ssb_num"),
         F.sum("ssw").alias("ssw_sum"),

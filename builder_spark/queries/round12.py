@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from builder_spark.catalog import load_table
+from builder_spark.operators.partitioning import materialize
 from builder_spark.registry import register
 
 #: repo-standard exact-cents encoding (identical text on both engines)
@@ -758,7 +759,7 @@ def q_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the (tiny, calendar-bounded) day rollup ONCE — four
     # consumers (tot, both Walsh sides, the plain-median rank) would
     # otherwise re-plan the fact scan four times
-    daily = _daily_rev(spark, sf_dir).localCheckpoint(eager=True)
+    daily = materialize(_daily_rev(spark, sf_dir))
     tot = daily.agg(F.count(F.lit(1)).alias("nd"))
     # spread the pair generation: the nested-loop join otherwise
     # inherits the day rollup's single post-AQE partition and one task
@@ -1123,11 +1124,11 @@ def q_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the 5-row moment table ONCE: the grand mean z̄ must be
     # aggregated separately (nested aggregates are illegal), and without
     # the checkpoint the quantile+join lineage would be planned twice
-    g = z.groupBy("grp").agg(
+    g = materialize(z.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("z").alias("sz"),
         F.sum(F.col("z") * F.col("z")).alias("szz"),
-    ).localCheckpoint(eager=True)
+    ))
     t = g.agg(
         F.count(F.lit(1)).alias("k"),
         F.sum("n").alias("n_tot"),
@@ -2788,10 +2789,9 @@ def q_storey_qvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize the 35-cell battery ONCE — four consumers (margins,
     # total, the scored join) would otherwise re-plan the fact scan
-    cells = (
+    cells = materialize(
         ev.groupBy("event_type", "dow")
         .agg(F.count(F.lit(1)).alias("o"))
-        .localCheckpoint(eager=True)
     )
     rows_m = cells.groupBy("event_type").agg(F.sum("o").alias("nr"))
     cols_m = cells.groupBy("dow").agg(F.sum("o").alias("nc"))
@@ -3039,10 +3039,9 @@ def q_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # ≤16-cell confusion matrix, materialized once for its 3 consumers
-    cells = (
+    cells = materialize(
         graded.groupBy("rx", "ry")
         .agg(F.count(F.lit(1)).cast("bigint").alias("o"))
-        .localCheckpoint(eager=True)
     )
     m = cells.agg(
         F.sum("o").cast("bigint").alias("n"),

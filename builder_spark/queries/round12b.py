@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from builder_spark.catalog import load_table
+from builder_spark.operators.partitioning import materialize
 from builder_spark.registry import register
 
 #: priority ordinal 1..5 — '1-URGENT' … '5-LOW' carry their own rank
@@ -248,7 +249,7 @@ def q_somers_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = quantile_cont_stitched(
         d, "v", {"q1": 0.25, "q2": 0.5, "q3": 0.75}
     ).select("q1", "q2", "q3")
-    cells = (
+    cells = materialize(
         d.crossJoin(F.broadcast(q))
         .select(
             "px",
@@ -260,7 +261,6 @@ def q_somers_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("px", "py")
         .agg(F.count(F.lit(1)).cast("bigint").alias("o"))
-        .localCheckpoint(eager=True)
     )
     a = cells.select(
         F.col("px").alias("apx"), F.col("py").alias("apy"), F.col("o").alias("ao")
@@ -602,10 +602,9 @@ def q_bowker_symmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = spark.createDataFrame(
         [(i, j) for i in range(4) for j in range(4)], "g1 int, g2 int"
     )
-    dense = (
+    dense = materialize(
         grid.join(F.broadcast(cells), ["g1", "g2"], "left")
         .select("g1", "g2", F.coalesce(F.col("o"), F.lit(0)).alias("o"))
-        .localCheckpoint(eager=True)
     )
     pairs = (
         dense.select(
@@ -729,10 +728,9 @@ def q_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     full_blocks = cell.groupBy("nk").agg(F.count(F.lit(1)).alias("cnt")).filter(
         F.col("cnt") == 5
     ).select("nk")
-    kept = (
+    kept = materialize(
         cell.join(F.broadcast(full_blocks), "nk")
         .select("nk", "prio", (F.col("s") * 1.0 / F.col("n")).alias("avg_v"))
-        .localCheckpoint(eager=True)
     )
     b_side = kept.select(
         F.col("nk"),
@@ -932,7 +930,7 @@ def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
     )
     ranked = stitched_running(d, ["mc", "doc_id"], rank_name="r", with_totals=True)
-    per_dec = (
+    per_dec = materialize(
         ranked.select(
             F.expr("CAST(((r - 1) * 10) div r_total AS INT)").alias("decile"),
             "mc",
@@ -944,7 +942,6 @@ def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("y").cast("bigint").alias("o1"),
             ((F.sum("mc") + 0.5 * F.count(F.lit(1))) / 997.0).alias("e1"),
         )
-        .localCheckpoint(eager=True)
     )
     den = F.col("e1") * (1 - F.col("e1") / F.col("nb"))
     hl = per_dec.agg(
@@ -1147,7 +1144,7 @@ def q_ari_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = quantile_cont_stitched(
         d, "v", {"q1": 0.25, "q2": 0.5, "q3": 0.75}
     ).select("q1", "q2", "q3")
-    cells = (
+    cells = materialize(
         d.crossJoin(F.broadcast(q))
         .select(
             "lang",
@@ -1159,7 +1156,6 @@ def q_ari_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("lang", "yq")
         .agg(F.count(F.lit(1)).cast("bigint").alias("o"))
-        .localCheckpoint(eager=True)
     )
     am = cells.groupBy("lang").agg(F.sum("o").cast("bigint").alias("a"))
     bm = cells.groupBy("yq").agg(F.sum("o").cast("bigint").alias("b"))
@@ -1300,14 +1296,14 @@ def q_hellinger_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("cents"),
         )
     )
-    per_dow = tagged.groupBy("dow").agg(
+    per_dow = materialize(tagged.groupBy("dow").agg(
         F.sum(F.when(F.col("region") == "AMERICA", F.col("cents")).otherwise(0))
         .cast("bigint")
         .alias("ra"),
         F.sum(F.when(F.col("region") == "ASIA", F.col("cents")).otherwise(0))
         .cast("bigint")
         .alias("rb"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = per_dow.agg(
         F.sum("ra").cast("bigint").alias("ta"), F.sum("rb").cast("bigint").alias("tb")
     )
@@ -1467,11 +1463,11 @@ def q_cointegration_eg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter((F.col("ca") > 0) & (F.col("cb") > 0))
     )
-    xy = day.select(
+    xy = materialize(day.select(
         "d",
         F.log(F.col("ca") / 100.0).alias("y"),
         F.log(F.col("cb") / 100.0).alias("x"),
-    ).localCheckpoint(eager=True)
+    ))
     m = xy.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
@@ -1942,11 +1938,11 @@ def q_white_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     same calendar-bounded day table; R² is the 2-predictor Cramer
     closed form from q_multi_regression's algebra — identical trees,
     det/variance denominators guarded on both engines."""
-    pts = _daily(spark, sf_dir).select(
+    pts = materialize(_daily(spark, sf_dir).select(
         (F.datediff(F.col("d"), F.lit("1992-01-01").cast("date")) / F.lit(365.25))
         .alias("t"),
         F.log(F.col("rev") / 100.0).alias("y"),
-    ).localCheckpoint(eager=True)
+    ))
     t, y = F.col("t"), F.col("y")
     m = pts.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2180,7 +2176,7 @@ def q_mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("q_id", "vec_id")
         )
 
-    full = top5(None).localCheckpoint(eager=True)
+    full = materialize(top5(None))
     parts = []
     for k in (8, 16):
         tk = top5(k).select(
@@ -2713,7 +2709,7 @@ def q_rbo_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("q_id", "vec_id", "rnk")
         )
 
-    full = top5(None).localCheckpoint(eager=True)
+    full = materialize(top5(None))
     trunc = top5(16).select(
         F.col("q_id").alias("t_qid"), F.col("vec_id").alias("t_vid"),
         F.col("rnk").alias("tr"),
@@ -2836,9 +2832,9 @@ def q_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     rk = stitched_running(devs, ["av", "okey"], rank_name="r").select(
         "grp", (F.col("r") * 1.0 * F.col("r")).alias("u")
     )
-    g = rk.groupBy("grp").agg(
+    g = materialize(rk.groupBy("grp").agg(
         F.count(F.lit(1)).alias("ng"), F.sum("u").alias("su")
-    ).localCheckpoint(eager=True)
+    ))
     sq = g.agg(
         F.sum(
             F.col("su") * F.col("su") / F.when(F.col("ng") * 1.0 != 0, F.col("ng") * 1.0)
@@ -3591,7 +3587,7 @@ def q_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join on month-of-year with year ordering (≤ 12·C(7,2) rows).
     Sign comparisons on exact integers — no float until z. Guards:
     a single-year corpus (no pairs) nulls z identically."""
-    mo = (
+    mo = materialize(
         load_table(spark, sf_dir, "orders")
         .groupBy(
             F.date_trunc("month", F.col("o_orderdate").cast("date")).alias("m"),
@@ -3603,7 +3599,6 @@ def q_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("rev")
         )
-        .localCheckpoint(eager=True)
     )
     b = mo.select(
         F.col("moy").alias("bmoy"), F.col("yr").alias("byr"), F.col("rev").alias("brev")
@@ -3903,7 +3898,7 @@ def q_hl_shift_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     series → 1 row of NULLs with n_days = 0 identically."""
     from builder_spark.operators.partitioning import stitched_running
 
-    daily = _daily(spark, sf_dir).localCheckpoint(eager=True)
+    daily = materialize(_daily(spark, sf_dir))
     tot = daily.agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
     # spread the pair generation (single post-AQE partition otherwise —
     # see q_hodges_lehmann); calendar-bounded, so defaultParallelism is
@@ -4059,10 +4054,9 @@ def q_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cnt") == 5
         ).select("nk")
     )
-    kept = (
+    kept = materialize(
         cell.join(F.broadcast(full_blocks), "nk")
         .select("nk", "prio", (F.col("s") * 1.0 / F.col("n")).alias("avg_v"))
-        .localCheckpoint(eager=True)
     )
     bb = kept.select(
         F.col("nk"), F.col("prio").alias("bprio"), F.col("avg_v").alias("bavg")
@@ -4086,9 +4080,9 @@ def q_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rk")
         )
     )
-    rng = kept.groupBy("nk").agg(
+    rng = materialize(kept.groupBy("nk").agg(
         (F.max("avg_v") - F.min("avg_v")).alias("spread")
-    ).localCheckpoint(eager=True)
+    ))
     rb = rng.select(F.col("nk").alias("bnk"), F.col("spread").alias("bspread"))
     qrank = (
         rng.crossJoin(F.broadcast(rb))
@@ -4109,9 +4103,9 @@ def q_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("q")
         )
     )
-    sij = ranked.join(F.broadcast(qrank), "nk").select(
+    sij = materialize(ranked.join(F.broadcast(qrank), "nk").select(
         "nk", "prio", (F.col("q") * (F.col("rk") - 3.0)).alias("s_ij")
-    ).localCheckpoint(eager=True)
+    ))
     a2 = sij.agg(
         F.countDistinct("nk").cast("bigint").alias("b"),
         F.sum(F.col("s_ij") * F.col("s_ij")).alias("a2"),
@@ -4245,9 +4239,7 @@ def q_van_der_waerden(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "grp", (F.col("r") * 1.0 / (F.col("r_total") + 1)).alias("p")
     )
-    sc = rk.select("grp", F.expr(_pprobit("p")).alias("s")).localCheckpoint(
-        eager=True
-    )
+    sc = materialize(rk.select("grp", F.expr(_pprobit("p")).alias("s")))
     g = sc.groupBy("grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("ng"), F.sum("s").alias("ag")
     )

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from builder_spark.catalog import load_table
-from builder_spark.operators.partitioning import stitched_running
+from builder_spark.operators.partitioning import materialize, stitched_running
 from builder_spark.operators.quantiles import quantile_cont_stitched
 from builder_spark.queries.round12b import _pprobit
 from builder_spark.registry import register
@@ -325,11 +325,11 @@ def q_fligner_killeen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint moves from fact grain to the 5-row group table — the
     # r14 shape materialized every scored row to feed a separate global
     # sum(s^2) scan (r15)
-    g = sc.groupBy("prio").agg(
+    g = materialize(sc.groupBy("prio").agg(
         F.count(F.lit(1)).alias("ng"),
         F.sum("s").alias("sg"),
         F.sum(F.col("s") * F.col("s")).alias("sg2g"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = g.agg(
         F.sum("ng").alias("n"),
         (F.sum("sg") / F.sum("ng")).alias("abar"),
@@ -444,7 +444,7 @@ def q_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("t") - F.col("tbar")) * (F.col("t") - F.col("tbar"))).alias("sxx"),
         F.sum((F.col("t") - F.col("tbar")) * (F.col("y") - F.col("ybar"))).alias("sxy"),
     )
-    r = idx.crossJoin(F.broadcast(m)).select(
+    r = materialize(idx.crossJoin(F.broadcast(m)).select(
         "t",
         (F.col("t") - F.col("tbar")).alias("xt"),
         (
@@ -455,7 +455,7 @@ def q_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "sxx",
         "sxy",
-    ).localCheckpoint(eager=True)
+    ))
     a, b = r.alias("a"), r.alias("b")
     t_off = F.col("b.t") - F.col("a.t")
     # lag-0 pairs include every row, so the banded INNER join loses none
@@ -1776,7 +1776,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not q_rows:
         return spark.createDataFrame([], schema)
     q_emb = F.array(*[F.lit(float(v)) for v in q_rows[0][0]])
-    cand = e.filter(F.col("vec_id") >= 5).select(
+    cand = materialize(e.filter(F.col("vec_id") >= 5).select(
         "vec_id",
         "embedding",
         F.round(cosine_sim(q_emb, F.col("embedding")), 6).alias("rel"),
@@ -1787,7 +1787,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # decimal (e.g. 0.156250) would diverge if re-rounded in the
         # driver loop. +0.0 is the module's signed-zero guard.
         "rel4", F.round(F.col("rel"), 4) + F.lit(0.0)
-    ).localCheckpoint(eager=True)
+    ))
     picked: list[tuple[int, int, float, float]] = []
     sel_embs: list = []
     sel_ids: list[int] = []

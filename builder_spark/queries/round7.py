@@ -927,12 +927,12 @@ def q_versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = scratch_dir("time_travel")
     shutil.rmtree(root, ignore_errors=True)
     t = make_target(f"vt://{root}/orders")
-    v1_path = t.next_data_path()
+    v1_path = t.stage_data_path()
     o.filter(F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")).write.mode(
         "overwrite"
     ).parquet(v1_path)
     t.commit(data_path=v1_path)
-    v2_path = t.next_data_path()
+    v2_path = t.stage_data_path()
     o.write.mode("overwrite").parquet(v2_path)
     t.commit(data_path=v2_path)
     back = spark.read.parquet(t.read_path(version=1))

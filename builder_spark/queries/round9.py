@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from builder_spark.catalog import load_table
+from builder_spark.operators.partitioning import materialize
 from builder_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -845,7 +846,7 @@ def q_bfs_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(step).alias("dist"))
         )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
+        visited = materialize(visited.unionByName(nxt))
         frontier = nxt.select("node")
     return (
         visited.groupBy("dist")

@@ -30,6 +30,7 @@ from builder_spark.operators.dedup import (
     band_candidates,
     charfold_hash,
 )
+from builder_spark.operators.partitioning import materialize
 from builder_spark.operators.topk import grouped_topk
 from builder_spark.registry import QUERIES, register
 # composite oracles splice q_cosine_topk (llmdata) and q_simhash
@@ -162,16 +163,13 @@ def q_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("doc_id", LongType())]
         + [StructField(f"s{i}", LongType()) for i in range(_K)]
     )
-    sig = (
+    # four consumers (band sides a/b + signature rejoins x/y): a
+    # repartition boundary re-ran the kernel 4 times; materialized, one
+    # kernel run, 8 longs per doc.
+    sig = materialize(
         spread(d.filter(F.size(toks) >= 3))
         .select("doc_id", "text")
         .mapInArrow(charfold_sig_gen(3, _A, _B, _P, "doc_id"), _sig_schema)
-        # checkpoint, not repartition (r15): ReusedExchange never fires
-        # above MapInArrow (Python functions defeat canonical subtree
-        # equality), so the exchange boundary re-ran the signature
-        # kernel once per consumer — 4 times here (band sides a/b +
-        # signature rejoins x/y). One kernel run, 8 longs per doc.
-        .localCheckpoint(eager=True)
     )
     pairs = band_candidates(sig, "doc_id", _band_buckets())
     x = sig.alias("x")
@@ -1600,23 +1598,19 @@ def q_near_dup_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact pairs + banded candidates), never all-pairs. Oracle composes
     the two registered oracles, so the metric can never disagree with
     the graded components."""
-    # localCheckpoint both pair sets (r15): each feeds TWO consumers
-    # (its count + the hit semi-join), and exchange reuse only dedupes
-    # the SHUFFLE — the exact-Jaccard verification projection sits
-    # ABOVE the last exchange and re-ran once per consumer (measured
-    # 2 × ~135 CPU-s per invocation at sf0.1). The checkpoint runs
-    # each component once and hands consumers the bare (id_a, id_b)
-    # rows — same tradeoff as the kernel-output checkpoints.
-    cand = (
+    # materialize both pair sets: each feeds TWO consumers (its count +
+    # the hit semi-join), and exchange reuse only dedupes the SHUFFLE —
+    # the exact-Jaccard verification projection sits ABOVE the last
+    # exchange and re-ran once per consumer (measured 2 × ~135 CPU-s per
+    # invocation at sf0.1).
+    cand = materialize(
         q_minhash_banded(spark, sf_dir)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
     )
-    truth = (
+    truth = materialize(
         QUERIES["q_jaccard_pairs"]
         .fn(spark, sf_dir)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
     )
     hits = cand.join(truth, ["id_a", "id_b"], "left_semi")
     n_c = cand.agg(F.count(F.lit(1)).alias("n_candidates"))

@@ -60,7 +60,7 @@ def main() -> None:
     src = make_target(src_uri)
 
     def ingest(filter_expr) -> int:
-        path = src.next_data_path()
+        path = src.stage_data_path()
         orders.filter(filter_expr).write.mode("overwrite").parquet(path)
         return src.commit(data_path=path)
 

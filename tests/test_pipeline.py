@@ -420,6 +420,48 @@ def test_parallel_execution_raises_on_cycle(tmp_path):
         em.start_execution(D0, D0 + timedelta(days=1), max_workers=4)
 
 
+def test_prefix_named_dependency_is_not_a_false_cycle(tmp_path):
+    """A dependency whose pattern merely CONTAINS a job's targets
+    pattern (``…_extra`` vs ``…_extra_in``, ``%Y%m%d`` vs
+    ``%Y%m%d_raw``) is not produced by that job: no self-edge, and the
+    graph still sorts topologically."""
+    bm = BuildManager()
+    bm.add(
+        Job(
+            name="a",
+            run=lambda ctx: None,
+            targets=f"{tmp_path}/a/%Y%m%d_extra",
+            depends=[f"{tmp_path}/a/%Y%m%d_extra_in"],
+        )
+    )
+    bm.add(
+        Job(
+            name="b",
+            run=lambda ctx: None,
+            targets=f"{tmp_path}/b/%Y%m%d",
+            depends=[f"{tmp_path}/b/%Y%m%d_raw"],
+        )
+    )
+    bg = bm.expand(D0, D3)
+    assert bg.graph.number_of_edges() == 0
+    assert len(bg.topological()) == 6
+
+
+def test_failed_job_keeps_its_error(tmp_path):
+    """A failure's cause survives: the journal line and
+    ``ExecutionManager.errors`` carry the last attempt's exception type
+    and message."""
+    attempts = {"n": 0}
+    state = f"{tmp_path}/state.jsonl"
+    em = ExecutionManager(_failing_manager(tmp_path, attempts), FileExecutor2(), state_path=state)
+    uid = f"crash@{D0.isoformat()}"
+    assert em.start_execution(D0, D0 + timedelta(days=1))[uid] == "failed"
+    assert em.errors == {uid: "RuntimeError: boom"}
+    (entry,) = em.history()
+    assert entry["status"] == "failed"
+    assert entry["error"] == "RuntimeError: boom"
+
+
 # ---- object-store target flavor (round 6, VERDICT missing-item 2) ------
 
 from builder_spark.pipeline import ObjectStoreTarget, make_target  # noqa: E402
@@ -590,7 +632,7 @@ def test_versioned_spark_pipeline_end_to_end(spark, tmp_path):
     src = make_target(f"vt://{tmp_path}/src")
 
     def write_src(version_val: int):
-        path = src.next_data_path()
+        path = src.stage_data_path()
         spark.range(5).select(
             F.col("id"), F.lit(version_val).alias("v")
         ).write.mode("overwrite").parquet(path)

@@ -378,7 +378,7 @@ def test_binary_search_pid_matches_linear_count(spark, cuts, vals, asc):
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i int, v int")
     out = df.select(
         "i",
-        _pid_case_sql("`v`", "`v`", list(cuts), asc).alias("p_sql"),
+        _pid_case_sql("`v`", list(cuts), asc).alias("p_sql"),
         _pid_case_lit("v", list(cuts), asc).alias("p_lit"),
     ).collect()
     for r in out:
