@@ -37,8 +37,11 @@ permutation. No randomness, reproducible across runs/clusters.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from builder_spark.functions.text import tokens, word_shingles
 from builder_spark.operators.partitioning import materialize, release, spread
@@ -105,9 +108,6 @@ def _minhash_sig_gen(k: int, shingle_words: int, id_name: str):
     consts = [_perm_consts(i) for i in range(k)]
 
     def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
         for batch in batches:
             ids = batch.column(0)
             lc = batch.column(1)
@@ -163,8 +163,6 @@ def minhash_signatures(
     Docs with fewer tokens than ``shingle_words`` have no shingles and
     are dropped, matching the old explode semantics.
     """
-    from pyspark.sql.types import LongType, StructField, StructType
-
     toks = tokens(text_col)
     th = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(_P)))
     # Shingle-less docs are dropped HERE, on the cheap token count —
@@ -743,96 +741,102 @@ def winnow_containment_pairs(
     )
 
 
-#: Largest node count whose label table :func:`dedup_clusters`
-#: broadcasts into each propagation round (≈ 320 MB framed).
-CLUSTER_BCAST_MAX = 20_000_000
+#: Most edges :func:`dedup_clusters` solves on the driver. An edge is
+#: two int64 ids: 16 B of Arrow, so 4M edges collect as 64 MB, 1/16 of
+#: the default 1 GB ``spark.driver.maxResultSize``. numpy's working set
+#: (the id concatenation, ``np.unique``'s sort and inverse, the parent
+#: array and each round's root gathers) comes on top: at the bound the
+#: driver process grew by 544 MB, 8.5× the Arrow bytes. Graphs above it
+#: take the distributed loop.
+CLUSTER_DRIVER_MAX_EDGES = 4_000_000
 
 
-def _propagation_round(bi: DataFrame, labels: DataFrame, broadcastable: bool) -> DataFrame:
+def _union_find(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(node ids, component minimum id) of the graph with edges
+    ``u[i]–v[i]``, vectorized: each round hooks every crossing edge's
+    larger root under its smaller one, then pointer-jumps until every
+    node points at its root. Nodes are indexed in ascending id order
+    and a node's parent never exceeds it, so each root is its
+    component's smallest id. The number of roots drops every round, so
+    the loop ends."""
+    ids, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u) :]
+    parent = np.arange(len(ids))
+    while len(a):
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        a, b, ra, rb = a[cross], b[cross], ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while not np.array_equal(grand := parent[parent], parent):
+            parent = grand
+    return ids, ids[parent]
+
+
+def _propagation_round(bi: DataFrame, labels: DataFrame) -> DataFrame:
     """One min-label propagation round: labels flow across the (already
-    bidirectional) edge table, every node keeps the minimum seen. ``bi``
-    carries one self-loop per node, so a node's own label reaches it
-    over the same join and ``labels`` is read exactly once — the round's
-    lineage extends the previous round's instead of doubling it. With
-    ``broadcastable`` the node-grain label table ships map-side and the
-    edge table is never exchanged (scanned straight from its
-    checkpoint); the label aggregate's map-side partials compress the
-    per-round shuffle to node grain."""
-    lab = F.broadcast(labels) if broadcastable else labels
+    bidirectional) edge table and every node keeps the minimum seen.
+    ``bi`` carries one self-loop per node, so a node's own label reaches
+    it over the same join (``labels`` is read once and the lineage grows
+    linearly where checkpoints are elided) and is kept as ``_old``: the
+    convergence test is a narrow count over the stored round."""
     return (
-        bi.join(lab, bi.v == lab.node)
+        bi.join(labels, bi.v == labels.node)
         .groupBy(F.col("u").alias("node"))
-        .agg(F.min("label").alias("label"))
+        .agg(
+            F.min("label").alias("label"),
+            F.min(F.when(F.col("u") == F.col("v"), F.col("label"))).alias("_old"),
+        )
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 15,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id),
     cluster_id = min doc id in the component (the canonical survivor).
+    Both columns have the input ids' type; a pair with a null id is not
+    an edge.
 
-    Iterative min-label propagation: every node starts labeled with
-    itself; each round, labels flow across edges (both directions) and
-    every node keeps the minimum seen. Converges in O(component
-    diameter) rounds — near-dup clusters are dense, so diameter is
-    small. Each round is one join + one aggregate (two shuffles) and the
-    loop exits early when a round changes nothing.
+    The edges are read once, as one Spark job of at most
+    :data:`CLUSTER_DRIVER_MAX_EDGES` + 1 rows. When they fit under that
+    bound — every near-dup graph a curation pass makes — the components
+    come from :func:`_union_find` on the driver and the labels go back
+    as a local frame: one job in all, where a propagation loop pays two
+    jobs per round and its rounds grow with the component diameter.
 
-    Lineage discipline (CRITICAL for iteration): each round's labels go
-    through :func:`~builder_spark.operators.partitioning.materialize` —
-    persist alone keeps the full logical plan, which grows every round
-    until Catalyst's plan-string rendering (and eventually the
-    optimizer itself) blows up. Checkpointing truncates the plan so
-    every round optimizes a constant-size query; the self-loop edges
-    keep the growth linear even where checkpoints are elided (the plan
-    audits in tools/window_audit.py walk the full lineage; reading the
-    label table twice per round doubled it). Each superseded round's
-    labels, and the edge table after the loop, are released, so only
-    the returned labels stay pinned. The durability trade-off (executor
-    loss) is the helper's, documented there. This is the
-    iterative-algorithm escape hatch: Spark has no recursive CTE, so the
-    DRIVER loops while every round stays a declarative, shuffle-bounded
-    DataFrame op.
-
-    Shuffle discipline (r16): a checkpoint discards partitioning
-    info, so a shuffle join would re-shuffle the EDGE table every
-    round (guide §2.4). Instead the node-grain label table — orders of
-    magnitude smaller than the edges for near-dup components — is
-    BROADCAST into the propagation join: the edge table is never
-    exchanged at all (scanned from its checkpoint, joined map-side),
-    and the only per-round shuffle is the label aggregate, which
-    map-side partial aggregation compresses to node grain. Guarded by
-    :data:`CLUSTER_BCAST_MAX` (20M nodes ≈ 320 MB framed, well under
-    the 8 GB / 512M-row broadcast cap): above it, fall back
-    to the shuffle join — at that scale co-partitioning via a bucketed
-    staging table is the production answer (SCALE.md).
+    Above the bound, iterative min-label propagation in Spark: every
+    node starts labelled with its smallest neighbour (or itself), each
+    round runs :func:`_propagation_round` (a shuffle join + aggregate),
+    and the loop stops when a round changes no label; labels only
+    decrease, so it ends, after O(component diameter) rounds. Each
+    round's labels go through
+    :func:`~builder_spark.operators.partitioning.materialize` so every
+    round plans a constant-size query; each superseded round and the
+    edge table are released, so only the returned labels stay pinned.
+    The label table is joined with a plain shuffle join: a graph past
+    the bound but under ~20M nodes would fit a broadcast label table,
+    but no caller builds one, so that path is not kept.
     """
-    edges = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+    edges = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")).dropna()
     bi = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    head = edges.limit(CLUSTER_DRIVER_MAX_EDGES + 1).toArrow()
+    if head.num_rows <= CLUSTER_DRIVER_MAX_EDGES:
+        ids, labels = _union_find(
+            head.column("u").to_numpy(zero_copy_only=False),
+            head.column("v").to_numpy(zero_copy_only=False),
+        )
+        id_type = bi.schema["u"].dataType
+        schema = StructType([StructField("doc_id", id_type), StructField("cluster_id", id_type)])
+        return pairs.sparkSession.createDataFrame(pa.table([ids, labels], schema.names), schema)
     loops = bi.select("u").distinct().select("u", F.col("u").alias("v"))
     bi = materialize(bi.union(loops))
     labels = materialize(
-        bi.filter(F.col("u") == F.col("v"))
-        .select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
+        bi.groupBy(F.col("u").alias("node"))
+        .agg(F.min("v").alias("label"))
+        .withColumn("_old", F.col("node"))
     )
-    broadcastable = labels.count() <= CLUSTER_BCAST_MAX
-    for _ in range(max_iter):
-        new_labels = materialize(_propagation_round(bi, labels, broadcastable))
-        changed = (
-            new_labels.join(labels.withColumnRenamed("label", "_old"), "node")
-            .filter(F.col("label") != F.col("_old"))
-            .count()
-        )
+    while labels.filter(F.col("label") != F.col("_old")).count():
+        new_labels = materialize(_propagation_round(bi, labels))
         release(labels)
         labels = new_labels
-        if changed == 0:
-            break
     release(bi)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 

@@ -677,10 +677,11 @@ _JACCARD_PAIRS_CTE = f"""
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate GROUPS, not just pairs: connected components over
-    exact-Jaccard ≥ 0.95 pairs via driver-looped min-label propagation
-    (Spark's iterative-algorithm path — each round is a declarative
-    join+agg). cluster_id = min doc_id = the canonical document a
-    dedup pipeline keeps. Oracle: DuckDB recursive CTE reachability."""
+    exact-Jaccard ≥ 0.95 pairs, by a numpy union-find on the driver
+    over the collected pairs (one Spark job), or by driver-looped
+    min-label propagation when the pairs exceed the operator's edge
+    bound. cluster_id = min doc_id = the canonical document a dedup
+    pipeline keeps. Oracle: DuckDB recursive CTE reachability."""
     from builder_spark.operators.dedup import dedup_clusters
 
     d = load_table(spark, sf_dir, "documents")

@@ -421,8 +421,9 @@ def q_grid_density_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor join on small-int keys. No point-to-point distance join
     anywhere: the classic way density clustering survives 100 TB of
     vectors. (Full DBSCAN connectivity would add a connected-components
-    pass over dense cells — the same iterative hash-min used by
-    q_dedup_clusters.)"""
+    pass over dense cells — the same components operator
+    q_dedup_clusters calls: a driver union-find on small graphs,
+    iterative hash-min above its edge bound.)"""
     e = load_table(spark, sf_dir, "embeddings")
     pts = e.select(
         F.floor(F.col("embedding")[0].cast("double") * 20).alias("cx"),

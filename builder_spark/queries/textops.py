@@ -775,7 +775,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge⨝rank join and one dst aggregate — at scale the edge list is
     partitioned by src and ranks broadcast if small (or co-partitioned
     if not), with localCheckpoint every few rounds to cut lineage
-    (see operators/dedup.py::dedup_clusters for the same pattern).
+    (see the distributed fallback of operators/dedup.py::dedup_clusters
+    for the same pattern).
     Float noise stays ~1e-13: ranks are sums of many divisions, so
     round(·,4) cannot sit on a decimal half."""
     d = load_table(spark, sf_dir, "documents")

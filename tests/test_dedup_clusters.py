@@ -1,106 +1,143 @@
-"""Plan shape and parity of the r16 dedup_clusters propagation round.
+"""Connected components of ``dedup_clusters`` on both of its paths.
 
-localCheckpoint discards partitioning info, so the r15 shape
-re-shuffled the EDGE table every label-propagation round. r16
-broadcasts the node-grain label table instead: the edge table is
-scanned straight from its checkpoint (zero exchanges on that side) and
-the only per-round shuffle is the label aggregate, compressed to node
-grain by map-side partials. Both paths must produce identical labels;
-the broadcast path must actually plan as a BroadcastHashJoin with no
-shuffle exchange below the edge scan.
+Graphs with at most ``CLUSTER_DRIVER_MAX_EDGES`` edges are solved by a
+numpy union-find on the driver; larger ones by min-label propagation in
+Spark. The tests force the Spark loop by setting that same module
+constant to -1 (no graph, not even an empty one, fits under it), and
+check that both paths give the same labels as a plain Python union-find,
+at the edges too (empty input, null ids, a chain longer than the old
+15-round cap).
 
-Also the lifetime of the checkpoints behind it: every checkpoint in the
-package goes through ``partitioning.materialize``, and ``dedup_clusters``
-releases each superseded round, so only the returned labels stay
-pinned.
+Also the lifetime of the checkpoints behind the Spark loop: every
+checkpoint in the package goes through ``partitioning.materialize``,
+and ``dedup_clusters`` releases each superseded round, so only the
+returned labels stay pinned.
 """
 
 from __future__ import annotations
 
 import ast
+import random
 import sys
 from pathlib import Path
 
-from pyspark.sql import functions as F
+import numpy as np
+import pytest
 
-from builder_spark.operators.dedup import _propagation_round, dedup_clusters
+from builder_spark.operators import dedup
+from builder_spark.operators.dedup import _union_find, dedup_clusters
 from builder_spark.operators.partitioning import materialize, release
-from builder_spark.plans import formatted_plan
 
 ROOT = Path(__file__).resolve().parent.parent
+PATHS = ("driver", "distributed")
 
 
-def _bi(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (8, 9), (9, 10), (2, 7)], "id_a long, id_b long"
-    )
-    edges = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    bi = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # one self-loop per node, as dedup_clusters builds it
-    loops = bi.select("u").distinct().select("u", F.col("u").alias("v"))
-    return bi.union(loops).localCheckpoint(eager=True)
+def _clusters(spark, monkeypatch, path, rows, schema="id_a long, id_b long"):
+    if path == "distributed":
+        monkeypatch.setattr(dedup, "CLUSTER_DRIVER_MAX_EDGES", -1)
+    out = dedup_clusters(spark.createDataFrame(rows, schema))
+    monkeypatch.undo()
+    return out
 
 
-def test_round_broadcasts_labels_and_never_shuffles_edges(spark):
-    bi = _bi(spark)
-    labels = (
-        bi.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    plan = formatted_plan(_propagation_round(bi, labels, broadcastable=True))
-    assert "BroadcastHashJoin" in plan
-    # the edge side must reach the join bare: its only Exchange is the
-    # label aggregate's (and the broadcast build) — a hashpartitioning
-    # exchange keyed on v would mean the edge table is shuffled again
-    assert "hashpartitioning(v#" not in plan
+def _labels(df) -> set[tuple]:
+    return {(r.doc_id, r.cluster_id) for r in df.collect()}
 
 
-def test_round_paths_agree(spark):
-    bi = _bi(spark)
-    labels = (
-        bi.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    a = {tuple(r) for r in _propagation_round(bi, labels, True).collect()}
-    b = {tuple(r) for r in _propagation_round(bi, labels, False).collect()}
-    assert a == b
+def _reference(edges) -> set[tuple]:
+    """Plain union-find: each node labelled with its component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
 
 
-def test_clusters_converge_to_min_label(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (8, 9), (9, 10), (2, 7)], "id_a long, id_b long"
-    )
-    got = {
-        (r.doc_id, r.cluster_id) for r in dedup_clusters(pairs).collect()
-    }
-    assert got == {
-        (1, 1), (2, 1), (3, 1), (7, 1),
-        (5, 5), (6, 5),
-        (8, 8), (9, 8), (10, 8),
-    }
+def _random_graph(seed: int) -> list[tuple[int, int]]:
+    """Sparse pairs over scattered ids (negative ones too), with repeated
+    and reversed edges, so components, id order and edge order are all
+    unrelated."""
+    rng = random.Random(seed)
+    ids = rng.sample(range(-10**6, 10**6), 60)
+    return [(rng.choice(ids), rng.choice(ids)) for _ in range(45)]
+
+
+def test_clusters_converge_to_min_label(spark, monkeypatch):
+    pairs = [(1, 2), (2, 3), (5, 6), (8, 9), (9, 10), (2, 7)]
+    for path in PATHS:
+        assert _labels(_clusters(spark, monkeypatch, path, pairs)) == {
+            (1, 1), (2, 1), (3, 1), (7, 1),
+            (5, 5), (6, 5),
+            (8, 8), (9, 8), (10, 8),
+        }, path
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_paths_agree_with_union_find_reference(spark, monkeypatch, seed):
+    pairs = _random_graph(seed)
+    want = _reference(pairs)
+    for path in PATHS:
+        assert _labels(_clusters(spark, monkeypatch, path, pairs)) == want, path
+
+
+def test_union_find_kernel_matches_reference():
+    rng = np.random.default_rng(7)
+    u = rng.integers(0, 30_000, 20_000)
+    v = rng.integers(0, 30_000, 20_000)
+    ids, labels = _union_find(u, v)
+    assert set(zip(ids.tolist(), labels.tolist())) == _reference(zip(u.tolist(), v.tolist()))
+
+
+def test_long_chain_is_one_cluster(spark, monkeypatch):
+    """A 41-node chain needs 40 propagation rounds: the loop runs until
+    no label changes (a 15-round cap used to return 26 clusters)."""
+    chain = [(i, i + 1) for i in range(40)]
+    for path in PATHS:
+        assert _labels(_clusters(spark, monkeypatch, path, chain)) == {
+            (i, 0) for i in range(41)
+        }, path
+
+
+@pytest.mark.parametrize("ids", ["bigint", "int", "string"])
+def test_empty_pairs_keep_the_id_type(spark, monkeypatch, ids):
+    for path in PATHS:
+        out = _clusters(spark, monkeypatch, path, [], f"id_a {ids}, id_b {ids}")
+        assert out.schema.simpleString() == f"struct<doc_id:{ids},cluster_id:{ids}>", path
+        assert out.collect() == [], path
+
+
+def test_pairs_with_a_null_id_are_not_edges(spark, monkeypatch):
+    """A null id is not a document: its pair is dropped before clustering
+    on both paths (the propagation loop used to label the null node 5)."""
+    for path in PATHS:
+        got = _labels(_clusters(spark, monkeypatch, path, [(None, 5), (5, 6)]))
+        assert got == {(5, 5), (6, 5)}, path
 
 
 def _persistent_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-def test_clusters_pin_only_the_returned_labels(spark):
-    """A chain of 8 nodes plus one pair takes 8 propagation rounds
-    (7 to converge, 1 to see no change); each round materializes new
-    labels, and every superseded one (and the edge table) is released:
-    exactly one new persistent RDD outlives the call, and the returned
-    frame still reads it."""
+def test_clusters_pin_only_the_returned_labels(spark, monkeypatch):
+    """A chain of 8 nodes plus one pair takes 7 propagation rounds
+    (6 to converge, 1 to see no change) after the initial labels; each
+    round materializes new labels, and every superseded one (and the
+    edge table) is released: exactly one new persistent RDD outlives the
+    call, and the returned frame still reads it. The driver path pins
+    nothing."""
     chain = [(i, i + 1) for i in range(7)] + [(20, 21)]
-    pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    before = _persistent_ids(spark)
-    out = dedup_clusters(pairs)
-    assert len(_persistent_ids(spark) - before) == 1
-    got = {(r.doc_id, r.cluster_id) for r in out.collect()}
-    assert got == {(i, 0) for i in range(8)} | {(20, 20), (21, 20)}
+    want = {(i, 0) for i in range(8)} | {(20, 20), (21, 20)}
+    for path, pinned in zip(PATHS, (0, 1)):
+        before = _persistent_ids(spark)
+        out = _clusters(spark, monkeypatch, path, chain)
+        assert len(_persistent_ids(spark) - before) == pinned, path
+        assert _labels(out) == want, path
 
 
 def test_release_is_a_noop_when_checkpoints_are_disabled(spark):

@@ -36,6 +36,10 @@ HEAVY = [
     "q_join_multi",
     "q_join_asof",
     "q_dedup_fuzzy",
+    # connected components: replicas copy each text, so the Jaccard
+    # pairs grow ~N² (0.19M at 1x, 3.1M at 4x, ~19M at 10x); 4x stays
+    # under dedup_clusters' edge bound, 10x takes its Spark loop
+    "q_dedup_clusters",
     "q_cosine_topk",
     "q_win_session",
     "q_tfidf_top_terms",
