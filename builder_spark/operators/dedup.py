@@ -799,8 +799,9 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> 
     :data:`CLUSTER_DRIVER_MAX_EDGES` + 1 rows. When they fit under that
     bound — every near-dup graph a curation pass makes — the components
     come from :func:`_union_find` on the driver and the labels go back
-    as a local frame: one job in all, where a propagation loop pays two
-    jobs per round and its rounds grow with the component diameter.
+    as a local frame of at most ``defaultParallelism`` partitions: one
+    job in all, where a propagation loop pays two jobs per round and its
+    rounds grow with the component diameter.
 
     Above the bound, iterative min-label propagation in Spark: every
     node starts labelled with its smallest neighbour (or itself), each
@@ -825,7 +826,12 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> 
         )
         id_type = bi.schema["u"].dataType
         schema = StructType([StructField("doc_id", id_type), StructField("cluster_id", id_type)])
-        return pairs.sparkSession.createDataFrame(pa.table([ids, labels], schema.names), schema)
+        # above arrow.localRelationThreshold (48 MB) createDataFrame cuts
+        # one partition per 10,000-row Arrow batch; coalesce is narrow
+        spark = pairs.sparkSession
+        return spark.createDataFrame(pa.table([ids, labels], schema.names), schema).coalesce(
+            spark.sparkContext.defaultParallelism
+        )
     loops = bi.select("u").distinct().select("u", F.col("u").alias("v"))
     bi = materialize(bi.union(loops))
     labels = materialize(

@@ -305,7 +305,6 @@ def stitched_running(
     order_cols: list[str | Column],
     running: dict[str, str | Column] | None = None,
     rank_name: str | None = None,
-    num_partitions: int = 32,
     partition_cols: list[str] | None = None,
     boundaries: list | None = None,
     running_min: dict[str, str | Column] | None = None,
@@ -324,30 +323,38 @@ def stitched_running(
        column exists.
     2. A LOCAL window per partition id computes within-partition
        running sums and row counts: all partitions work independently.
-    3. Per-partition totals (``num_partitions`` rows) cumsum into
+    3. Per-partition totals (one row per partition id) cumsum into
        prefix OFFSETS — the only single-partition window, over data
        whose size equals the partition COUNT — broadcast back.
     4. global = local + offset of all earlier partitions.
 
     The result is independent of where the range boundaries fall
-    (offsets absorb any split). NOTHING IS PERSISTED in any mode — a
-    long-lived session running dozens of stitched queries pins no
-    storage (the r4 lifecycle fix). Three boundary strategies:
+    (offsets absorb any split).
+
+    Sizing, one rule: ``n = 2 × defaultParallelism`` pinned shuffle
+    partitions, so every core gets work and AQE cannot coalesce the
+    row-CPU-bound local window onto a few tasks. Numeric cuts are
+    ``4n`` (about four pid values hash into each shuffle partition,
+    which evens out their uneven placement), string cuts ``2n − 1``,
+    and the range fallback uses ``n`` ranges. At small inputs the
+    stitch's cost is per task, so the count follows the session, not
+    the data.
+
+    NOTHING IS PERSISTED in any mode — a long-lived session running
+    dozens of stitched queries pins no storage (the r4 lifecycle fix).
+    Three boundary strategies:
 
     - default (``boundaries=None``), bare first order column of a
       numeric / date / timestamp / boolean type: boundaries are
       AUTO-DERIVED by one ``approxQuantile`` pass over an
       order-preserving numeric encoding of that column (column-pruned
-      scan, 1% relative error, ``4 × num_partitions`` cuts so the hash
-      placement of pids stays balanced), and the partition id becomes
+      scan, 1% relative error, ``4n`` cuts), and the partition id becomes
       a DETERMINISTIC expression — count of boundaries passed by the
       first order column (reversed for a DESC first column; NULLs land
       on the sort-order end). Both subplans then compute identical
       assignments with no exchange consistency requirement at all.
       Boundary quality only affects balance, never correctness (the
-      offsets absorb any split). Measured sf0.1 local[32] on the
-      decile stitch: ≈0.6 s quantile pass + 1.5 s cold query vs 2.7 s
-      for the old persist design — and zero pinned storage.
+      offsets absorb any split).
     - default, bare STRING first order column: same deterministic
       literal-cut construction, with cuts taken from a bounded
       hash-sampled collect (``_sampled_literal_cuts``) instead of
@@ -402,6 +409,7 @@ def stitched_running(
     order_exprs = [F.col(c).asc() if isinstance(c, str) else c for c in order_cols]
     pid: Column | None = None
     simple = _simple_order(order_cols[0])
+    n = 2 * df.sparkSession.sparkContext.defaultParallelism
     if boundaries is not None:
         if simple is None:
             raise ValueError(
@@ -416,14 +424,11 @@ def stitched_running(
             # auto-derive deterministic cuts: one approxQuantile pass on
             # the (column-pruned, order-preserving-encoded) first order
             # column (memoized by plan semantic hash — boundaries only
-            # affect balance); 4× cuts so hashing the pid keys into
-            # shuffle partitions stays balanced
+            # affect balance)
             if _is_numeric(df, first):
-                cuts = _memo_boundaries(df, first, 4 * num_partitions)
+                cuts = _memo_boundaries(df, first, 4 * n)
             else:
-                cuts = _memo_boundaries(
-                    df.select(F.expr(enc).alias("_enc")), "_enc", 4 * num_partitions
-                )
+                cuts = _memo_boundaries(df.select(F.expr(enc).alias("_enc")), "_enc", 4 * n)
             pid = _pid_case_sql(enc, cuts, asc)
         elif dict(df.dtypes).get(first, "") == "string":
             # strings have no approxQuantile: bounded deterministic
@@ -432,9 +437,7 @@ def stitched_running(
             # memoized like the numeric boundaries so repeated
             # constructions skip the sampling action
             cuts = _memo_cuts(
-                df, first, 2 * num_partitions - 1,
-                lambda: _sampled_literal_cuts(df, first, 2 * num_partitions - 1),
-                kind="str",
+                df, first, 2 * n - 1, lambda: _sampled_literal_cuts(df, first, 2 * n - 1), kind="str"
             )
             pid = _pid_case_lit(first, cuts, asc)
     if pid is not None:
@@ -445,21 +448,11 @@ def stitched_running(
         # reuse then scans and shuffles the input exactly once, and the
         # offsets branch is a sort-free hash aggregate over the reused
         # shuffle output (r6: replaces both the r5 double scan and the
-        # interim double sort).
-        #
-        # The partition COUNT is pinned (REPARTITION_BY_NUM): a bare
-        # repartition(col) is REPARTITION_BY_COL, which AQE's
-        # byte-based partition coalescing is allowed to shrink — and
-        # the stitch's local window is CPU-bound per ROW, not per
-        # byte, so coalescing serializes it (measured r15 sf0.1:
-        # q_decile_stats' 600k-row local-window stage coalesced to 3
-        # tasks, 1.76 s of its 1.87 s warm median; pinned at cluster
-        # parallelism the same stage fans back out to every core).
-        # The count scales with the cluster (defaultParallelism), with
-        # the cut count (4 × num_partitions keeps ≥4 pid values per
-        # shuffle partition) as the floor for small clusters.
-        n_shuffle = max(df.sparkSession.sparkContext.defaultParallelism, num_partitions)
-        ranged = df.withColumn("_pid", pid).repartition(n_shuffle, F.col("_pid"), *pc)
+        # interim double sort). The count `n` (see the docstring) is
+        # pinned: a bare repartition(col) is REPARTITION_BY_COL, which
+        # AQE's byte-based coalescing may shrink onto a few tasks (r15
+        # sf0.1: q_decile_stats' 600k-row local window ran on 3 tasks).
+        ranged = df.withColumn("_pid", pid).repartition(n, F.col("_pid"), *pc)
     else:
         # residual fallback (complex first order expression or custom
         # NULLS placement): sampled range exchange. The local-window and
@@ -502,7 +495,7 @@ def stitched_running(
             + order_exprs
             + [F.col(c).asc() for c in df.columns]
         )
-        ranged = df.repartitionByRange(num_partitions, *range_exprs).withColumn(
+        ranged = df.repartitionByRange(n, *range_exprs).withColumn(
             "_pid", F.spark_partition_id()
         )
     local_w = (

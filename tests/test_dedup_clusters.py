@@ -23,6 +23,7 @@ from pathlib import Path
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from builder_spark.operators import dedup
 from builder_spark.operators.dedup import _union_find, dedup_clusters
@@ -118,6 +119,35 @@ def test_pairs_with_a_null_id_are_not_edges(spark, monkeypatch):
     for path in PATHS:
         got = _labels(_clusters(spark, monkeypatch, path, [(None, 5), (5, 6)]))
         assert got == {(5, 5), (6, 5)}, path
+
+
+def test_driver_path_labels_are_at_most_parallelism_partitions(spark):
+    """The driver path's labels come back through ``createDataFrame``.
+    Above ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB,
+    about 3M nodes) that makes one partition per Arrow batch of 10,000
+    rows, so the 4M-edge bound would return hundreds of partitions. The
+    threshold is lowered here so a graph of 100k nodes (more than
+    ``defaultParallelism`` batches) takes that branch: it must still
+    return at most ``defaultParallelism`` partitions, every label
+    intact."""
+    par = spark.sparkContext.defaultParallelism
+    n = max(100_000, 10_000 * (par + 1))
+    pairs = spark.range(0, n, 2).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1MB")
+    try:
+        out = dedup_clusters(pairs)
+    finally:
+        spark.conf.set(key, old)
+    assert out.rdd.getNumPartitions() <= par
+    got = out.select(
+        F.count(F.lit(1)).alias("n"),
+        F.sum((F.col("cluster_id") != F.col("doc_id") - F.col("doc_id") % 2).cast("int")).alias("bad"),
+    ).first()
+    assert (got.n, got.bad) == (n, 0)
 
 
 def _persistent_ids(spark) -> set[int]:

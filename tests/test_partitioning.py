@@ -78,7 +78,7 @@ from pyspark.sql import Window
 from builder_spark.operators.partitioning import _simple_order, stitched_running
 
 
-def test_simple_order_rendering_pinned():
+def test_simple_order_rendering_pinned(spark):
     """_simple_order parses Column._jc.toString() — a private rendering
     that can change across Spark versions. Pin the expected forms so an
     upgrade SURFACES a silent demotion of every stitched query to the
@@ -113,14 +113,12 @@ def test_stitched_string_order_is_deterministic_and_exact(spark):
     window — ASC and DESC."""
     rows = [(f"s{(i * 17) % 37:03d}", i) for i in range(500)]
     df = spark.createDataFrame(rows, "k string, v int").repartition(4)
-    got = stitched_running(df, ["k", "v"], running={"rv": "v"}, rank_name="rn",
-                           num_partitions=4)
+    got = stitched_running(df, ["k", "v"], running={"rv": "v"}, rank_name="rn")
     assert "rangepartitioning" not in got._jdf.queryExecution().executedPlan().toString()
     _same(got, _naive(df, [F.col("k").asc(), F.col("v").asc()], "v"),
           ["k", "v", "rv", "rn"])
 
-    got_d = stitched_running(df, [F.col("k").desc(), F.col("v").asc()],
-                             rank_name="rn", num_partitions=4)
+    got_d = stitched_running(df, [F.col("k").desc(), F.col("v").asc()], rank_name="rn")
     want_d = df.withColumn(
         "rn", F.row_number().over(Window.orderBy(F.col("k").desc(), F.col("v").asc())).cast("bigint")
     )
@@ -134,13 +132,13 @@ def test_stitched_date_and_timestamp_order_deterministic(spark):
     rows = [(datetime.date(2020, 1, 1) + datetime.timedelta(days=(i * 7) % 90), i)
             for i in range(400)]
     df = spark.createDataFrame(rows, "d date, v int").repartition(4)
-    got = stitched_running(df, ["d", "v"], rank_name="rn", num_partitions=4)
+    got = stitched_running(df, ["d", "v"], rank_name="rn")
     assert "rangepartitioning" not in got._jdf.queryExecution().executedPlan().toString()
     want = df.withColumn("rn", F.row_number().over(Window.orderBy("d", "v")).cast("bigint"))
     _same(got, want, ["d", "v", "rn"])
 
     ts = df.select(F.col("d").cast("timestamp").alias("t"), "v")
-    got_t = stitched_running(ts, ["t", "v"], rank_name="rn", num_partitions=4)
+    got_t = stitched_running(ts, ["t", "v"], rank_name="rn")
     assert "rangepartitioning" not in got_t._jdf.queryExecution().executedPlan().toString()
     want_t = ts.withColumn("rn", F.row_number().over(Window.orderBy("t", "v")).cast("bigint"))
     _same(got_t, want_t, ["t", "v", "rn"])
@@ -159,15 +157,14 @@ def test_stitched_fallback_needs_exchange_reuse(spark):
     order = [(F.col("v") * 2 + 1).asc(), F.col("id").asc()]
 
     # fallback is exact while reuse is on (the default)
-    got = stitched_running(df, order, running={"rv": "v"}, rank_name="rn",
-                           num_partitions=4)
+    got = stitched_running(df, order, running={"rv": "v"}, rank_name="rn")
     _same(got, _naive(df, order, "v"), ["id", "v", "payload", "rv", "rn"])
 
     spark.conf.set("spark.sql.exchange.reuse", "false")
     try:
         with pytest.raises(ValueError, match="exchange.reuse"):
             stitched_running(df, order, rank_name="rn")
-        det = stitched_running(df, ["v", "id"], rank_name="rn", num_partitions=4)
+        det = stitched_running(df, ["v", "id"], rank_name="rn")
         want = df.withColumn("rn", F.row_number().over(Window.orderBy("v", "id")).cast("bigint"))
         _same(det, want, ["id", "v", "rn"])
     finally:
@@ -200,6 +197,32 @@ def test_stitched_covered_projection_reuses_exchange(spark):
     assert final_section.count("FileScan") == 1
 
 
+@pytest.mark.parametrize("grouped", [False, True], ids=["ungrouped", "grouped"])
+def test_stitched_exchange_is_pinned_at_twice_parallelism(spark, sf_dir, grouped):
+    """The stitch's one explicit exchange hashes (_pid, groups) into
+    exactly 2 × defaultParallelism partitions as REPARTITION_BY_NUM (so
+    AQE cannot coalesce it), and it stays ONE exchange: the offsets
+    branch reads it back as a ReusedExchange of the same node."""
+    import re
+
+    df = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        "o_orderkey", (F.col("o_orderkey") % 7).alias("v"), (F.col("o_orderkey") % 3).alias("g")
+    )
+    pc = ["g"] if grouped else []
+    out = stitched_running(df, ["o_orderkey"], running={"rv": "v"}, rank_name="rn",
+                           partition_cols=pc)
+    out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    keys = r"_pid#\d+, g#\d+L" if grouped else r"_pid#\d+"
+    n = 2 * spark.sparkContext.defaultParallelism
+    pinned = re.compile(rf"Exchange hashpartitioning\({keys}, {n}\), REPARTITION_BY_NUM, \[plan_id=(\d+)\]")
+    live = [ln for ln in final.splitlines() if "REPARTITION_BY_NUM" in ln and "ReusedExchange" not in ln]
+    reused = [ln for ln in final.splitlines() if "ReusedExchange" in ln]
+    assert len(live) == 1 and pinned.search(live[0]), final
+    assert len(reused) == 1 and pinned.search(reused[0]), final
+    assert pinned.search(live[0]).group(1) == pinned.search(reused[0]).group(1)
+
+
 def test_stitched_fallback_rejects_map_payload(spark):
     """Map-typed payload columns can't be range keys, and silently
     dropping them from the shared-exchange keys would reopen the
@@ -210,3 +233,53 @@ def test_stitched_fallback_rejects_map_payload(spark):
     )
     with pytest.raises(ValueError, match="map-typed"):
         stitched_running(df, [(F.col("v") * 2).asc(), F.col("id").asc()], rank_name="rn")
+
+
+# ---- stitched_running edges vs the naive window --------------------------
+
+
+def _edge_rows(case: str, first: str) -> list[tuple]:
+    """(id, k, g, v) rows for one edge case; ``k`` is the first order
+    column (bigint or string), ``id`` breaks its ties."""
+    n = {"empty": 0, "one_row": 1, "all_tied": 200, "few_distinct": 200}[case]
+    rows = []
+    for i in range(n):
+        kv = 7 if case == "all_tied" else (i * 5) % 3
+        k = kv if first == "bigint" else f"k{kv}"
+        rows.append((i, k, f"g{i % 3}", (i * 37) % 11 - 5))
+    return rows
+
+
+@pytest.mark.parametrize("grouped", [False, True], ids=["ungrouped", "grouped"])
+@pytest.mark.parametrize("first", ["bigint", "string"])
+@pytest.mark.parametrize("case", ["empty", "one_row", "all_tied", "few_distinct"])
+def test_stitched_edges_match_naive_window(spark, case, first, grouped):
+    """Empty input, one row, every first-order value tied, and fewer
+    distinct first-order values than boundary cuts: every output of the
+    stitch (running sum, running min, exclusive running min, rank and
+    the per-group totals) equals the plain window over the same order,
+    ungrouped and grouped."""
+    rows = _edge_rows(case, first)
+    df = spark.createDataFrame(rows, f"id bigint, k {first}, g string, v bigint").repartition(3)
+    pc = ["g"] if grouped else []
+    got = stitched_running(
+        df, ["k", "id"], running={"rs": "v"}, running_min={"rm": "v"},
+        running_min_excl={"rme": "v"}, rank_name="rn", partition_cols=pc,
+        with_totals=True,
+    )
+    w = Window.partitionBy(*pc).orderBy("k", "id")
+    upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    before = w.rowsBetween(Window.unboundedPreceding, -1)
+    whole = Window.partitionBy(*pc)
+    want = df.select(
+        "*",
+        F.sum("v").over(upto).cast("bigint").alias("rs"),
+        F.min("v").over(upto).alias("rm"),
+        F.min("v").over(before).alias("rme"),
+        F.row_number().over(w).cast("bigint").alias("rn"),
+        F.sum("v").over(whole).cast("bigint").alias("rs_total"),
+        F.count(F.lit(1)).over(whole).cast("bigint").alias("rn_total"),
+    )
+    cols = ["id", "k", "g", "v", "rs", "rm", "rme", "rn", "rs_total", "rn_total"]
+    assert got.count() == len(rows)
+    _same(got, want, cols)

@@ -807,9 +807,7 @@ def test_stitched_running_desc_with_nulls(spark):
 
     rows = [(i, None if i % 5 == 0 else (i * 13) % 40) for i in range(60)]
     df = spark.createDataFrame(rows, "id int, v int").repartition(4)
-    got = stitched_running(
-        df, [F.col("v").desc(), F.col("id").asc()], rank_name="rn", num_partitions=4
-    )
+    got = stitched_running(df, [F.col("v").desc(), F.col("id").asc()], rank_name="rn")
     w = Window.orderBy(F.col("v").desc(), F.col("id").asc())
     want = df.withColumn("rn", F.row_number().over(w).cast("bigint"))
     assert sorted((r.id, r.rn) for r in got.select("id", "rn").collect()) == sorted(

@@ -446,7 +446,6 @@ def test_grouped_stitch_matches_partitioned_window(spark, data):
         rank_name="rn",
         partition_cols=["k"],
         with_totals=True,
-        num_partitions=4,
     )
     w = (
         Window.partitionBy("k")

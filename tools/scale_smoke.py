@@ -3,9 +3,10 @@
 
 The grading fixtures stop at sf0.1 (600k lineitem / 5k docs). This
 tool manufactures a 10× corpus in /tmp by unioning the sf0.1 tables N
-times with key offsets (ids stay unique, distributions unchanged) and
-times the operators whose cost curves matter — joins, dedup, vector
-top-k, sessionization. A roughly-linear wall-clock ratio vs bench is
+times with key offsets (ids stay unique, distributions unchanged; each
+replica's document tokens carry their own suffix, so text
+near-duplicates stay within a replica) and times the operators whose
+cost curves matter — joins, dedup, vector top-k, sessionization. A roughly-linear wall-clock ratio vs bench is
 the evidence that the plans scale; superlinear blowup flags an
 operator whose shuffle or fan-out is size-sensitive.
 
@@ -36,9 +37,9 @@ HEAVY = [
     "q_join_multi",
     "q_join_asof",
     "q_dedup_fuzzy",
-    # connected components: replicas copy each text, so the Jaccard
-    # pairs grow ~N² (0.19M at 1x, 3.1M at 4x, ~19M at 10x); 4x stays
-    # under dedup_clusters' edge bound, 10x takes its Spark loop
+    # connected components: replicas share no token, so the Jaccard
+    # pairs grow N× (0.19M at 1x, 0.76M at 4x, ~1.9M at 10x): the
+    # driver path up to 20x, dedup_clusters' Spark loop from 21x
     "q_dedup_clusters",
     "q_cosine_topk",
     "q_win_session",
@@ -388,6 +389,20 @@ _OFFSETS = {
     "embeddings": ["vec_id"],
 }
 
+#: bumped whenever build_scaled's output changes, so a corpus cached by
+#: an older build is rebuilt instead of reused
+_BUILD_VERSION = "2"
+
+
+def _replica_text(i: int):
+    """Replica ``i``'s ``documents.text``: every space token (the
+    ``tokens`` split, empty ones included) gets the suffix ``~i``. The
+    map is one-to-one within a replica, so pairs inside it keep their
+    1x Jaccard, and pairs across replicas share no token."""
+    return F.array_join(
+        F.transform(F.split("text", " "), lambda w: F.concat(w, F.lit(f"~{i}"))), " "
+    )
+
 
 def build_scaled(spark, src_dir: str, n: int, out_dir: str) -> None:
     for t in TABLES:
@@ -400,6 +415,8 @@ def build_scaled(spark, src_dir: str, n: int, out_dir: str) -> None:
                 p = df
                 for c in key_cols:
                     p = p.withColumn(c, F.col(c) + F.lit(i * mx[c]))
+                if t == "documents" and i:
+                    p = p.withColumn("text", _replica_text(i))
                 parts.append(p)
             out = parts[0]
             for p in parts[1:]:
@@ -424,10 +441,17 @@ def main() -> None:
     spark = get_spark("builder-spark-scale-smoke")
     registry = load_all()
 
-    if not os.path.exists(os.path.join(out_dir, "_READY")):
+    ready = os.path.join(out_dir, "_READY")
+    try:
+        with open(ready) as f:
+            cached = f.read() == _BUILD_VERSION
+    except FileNotFoundError:
+        cached = False
+    if not cached:
         shutil.rmtree(out_dir, ignore_errors=True)
         build_scaled(spark, src, n, out_dir)
-        open(os.path.join(out_dir, "_READY"), "w").close()
+        with open(ready, "w") as f:
+            f.write(_BUILD_VERSION)
 
     registry["q_agg_group"].fn(spark, out_dir).count()  # warmup
     times = {}
