@@ -1,10 +1,9 @@
 """Text analysis column helpers — tokenization, shingling, fingerprints.
 
 The fixture corpus is single-space-separated lowercase words, so
-``split(text, ' ')`` is the parity-safe tokenizer (FIXTURES.md); the
-regex tokenizer handles messier input. Fingerprints use md5 (present
-and identical in Spark and DuckDB) rather than xxhash64/murmur (which
-are engine-specific).
+``split(text, ' ')`` is the parity-safe tokenizer (FIXTURES.md).
+Fingerprints use md5 (present and identical in Spark and DuckDB) rather
+than xxhash64/murmur (which are engine-specific).
 """
 
 from __future__ import annotations
@@ -20,11 +19,6 @@ def _c(col: Column | str) -> Column:
 def tokens(text: Column | str) -> Column:
     """Whitespace tokens (exact parity with SQL string_split)."""
     return F.split(_c(text), " ")
-
-
-def regex_tokens(text: Column | str, pattern: str = r"[^a-z0-9]+") -> Column:
-    """Regex tokenizer for messy text (BPE-ish pre-tokenization)."""
-    return F.split(_c(text), pattern)
 
 
 def word_shingles(text: Column | str, n: int = 3) -> tuple[Column, Column]:

@@ -23,6 +23,10 @@ instead of carrying its own copy:
   document frequency and keeps the first ``|d| − ⌈τ·|d|⌉ + 1`` — the
   prefix that any pair scoring ≥ τ must share (SSJoin / PPJoin).
 
+Verification lives in one helper too: :func:`attach_pairs` pins the
+candidate pairs to cluster parallelism and joins each side's columns
+back by id, and every verifier scores the attached columns.
+
 τ slack: every verifier here accepts ``round(score, 4) ≥ τ``, i.e. true
 scores down to τ − 5e-5. A prefix length (or size/positional bound)
 computed from the exact τ can drop a boundary pair that the verifier —
@@ -345,49 +349,66 @@ def prefix_filter_candidates(items: DataFrame, tau: float) -> DataFrame:
     )
 
 
-def _pin_pair_parallelism(candidates: DataFrame) -> DataFrame:
-    """Fan the candidate-pair table out to cluster parallelism with an
-    explicit REPARTITION_BY_NUM before the verification stage.
+def attach_pairs(pairs: DataFrame, items: DataFrame, id_col: str, cols: list[str]) -> DataFrame:
+    """``pairs`` (id_a, id_b, ...) with ``items``' ``cols`` joined onto
+    both sides by ``id_col`` as ``<col>_a`` and ``<col>_b`` — the attach
+    step of every near-duplicate verifier.
 
-    The verification stage's cost is per-PAIR CPU (attach two element
-    arrays, count the overlap), but the candidate `.distinct()` feeding
-    it is byte-tiny (16 B/pair), so AQE's byte-based partition
-    coalescing legally shrinks it — measured at sf0.1: q_ngram_jaccard's
-    verify stage ran 167 CPU-s on 8 tasks, q_containment_dedup's pair
-    fan-out on ONE task (15 s straggler). Pinning the count makes the
-    exchange exempt from coalescing (same fix, same reasoning as the
-    stitch's (_pid) repartition). ROUND-ROBIN, not hash on (id_a,
-    id_b): the distinct's own ENSURE_REQUIREMENTS exchange already
-    hash-partitions by exactly that key, so a keyed pin is elided as a
-    redundant exchange and the surviving distinct exchange coalesces
-    anyway (observed in the AQE-final plan: the pin vanished, verify
-    ran on 16 tasks / 113 CPU-s). Round-robin partitioning differs
-    from the child's, survives, and its sort-before-repartition pass
-    is trivial on 16-byte pair rows. Scale-adaptive: defaultParallelism
-    is the cluster's core count, not a local constant."""
-    n = candidates.sparkSession.sparkContext.defaultParallelism
-    return candidates.repartition(n)
+    The pairs first fan out to cluster parallelism with an explicit
+    REPARTITION_BY_NUM. The verification stage's cost is per-PAIR CPU
+    (attach two element arrays, count the overlap), but the candidate
+    `.distinct()` feeding it is byte-tiny (16 B/pair), so AQE's
+    byte-based partition coalescing legally shrinks it — measured at
+    sf0.1: q_ngram_jaccard's verify stage ran 167 CPU-s on 8 tasks,
+    q_containment_dedup's pair fan-out on ONE task (15 s straggler).
+    Pinning the count makes the exchange exempt from coalescing (same
+    fix, same reasoning as the stitch's (_pid) repartition).
+    The pin hashes ONE derived key, xxhash64(id_a, id_b), and neither
+    of the obvious alternatives:
+    - hash on (id_a, id_b): the distinct's own ENSURE_REQUIREMENTS
+      exchange already hash-partitions by exactly that key, so the pin
+      is elided as a redundant exchange and the surviving distinct
+      exchange coalesces anyway (observed in the AQE-final plan: the
+      pin vanished, verify ran on 16 tasks / 113 CPU-s);
+    - round-robin: it survives, but Spark sorts every row before a
+      round-robin shuffle (``sortBeforeRepartition``, for retry
+      determinism). On the 4x scale-smoke corpus that sort cost
+      q_simhash more than the pin saved: 26-33 s against 26-27 s
+      unpinned and 19-22 s with the derived-key hash.
+    Pairs are distinct, so the derived key spreads them as evenly as
+    round-robin. Scale-adaptive: defaultParallelism is the cluster's
+    core count, not a local constant."""
+    out = pairs.repartition(
+        pairs.sparkSession.sparkContext.defaultParallelism, F.xxhash64("id_a", "id_b")
+    )
+    for side in ("a", "b"):
+        key = f"id_{side}"
+        out = out.join(
+            items.select(
+                F.col(id_col).alias(key), *[F.col(c).alias(f"{c}_{side}") for c in cols]
+            ),
+            key,
+        )
+    return out
 
 
 def jaccard_from_sets(
     items: DataFrame, candidates: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact Jaccard over candidate pairs: both element arrays join in
-    whole (two broadcast-or-shuffle hash joins keyed on id), and the
-    intersection is computed JVM-side with array_intersect — no
-    element-level explode, cost O(|candidates| · avg set size).
+    whole (:func:`attach_pairs`), and the intersection is computed
+    JVM-side with array_intersect — no element-level explode, cost
+    O(|candidates| · avg set size).
 
     A vectorized Arrow pair-overlap kernel (sorted per-doc arrays +
     searchsorted probes) was built and MEASURED against this form at
-    sf0.1 (r15): with the partition pin below, the JVM intersect runs
+    sf0.1 (r15): with attach_pairs' partition pin, the JVM intersect runs
     the whole verify stage in ~2 s, while the kernel paid ~21 GB of
     pair-grain Arrow boundary (the real gram sets average ~900
     elements, not the 200 the napkin math assumed) plus numpy passes
     that cost about the same CPU as the hash sets it replaced — 17-31 s
     walls, 10× WORSE. Rejected; the pin is the whole win here."""
-    a = items.select(F.col("_id").alias("id_a"), F.col("_arr").alias("_ta"))
-    b = items.select(F.col("_id").alias("id_b"), F.col("_arr").alias("_tb"))
-    pairs = _pin_pair_parallelism(candidates).join(a, "id_a").join(b, "id_b")
+    pairs = attach_pairs(candidates, items, "_id", ["_arr"])
     # SSJoin SIZE FILTER (exactness-preserving): J(A,B) ≥ τ forces
     # |A∩B| ≥ τ·max(|A|,|B|) and |A∩B| ≤ min(|A|,|B|), hence
     # min ≥ τ·max — a candidate whose sizes are more than 1/τ apart
@@ -396,11 +417,11 @@ def jaccard_from_sets(
     # a PRUNING-only filter: it removes the 1-ulp FP edge when min
     # equals (τ−5e-5)·max exactly, at the cost of a few extra
     # candidates reaching the exact check.
-    sa, sb = F.size("_ta"), F.size("_tb")
+    sa, sb = F.size("_arr_a"), F.size("_arr_b")
     pairs = pairs.filter(
         F.least(sa, sb).cast("double") >= F.lit(threshold - 1e-4) * F.greatest(sa, sb)
     )
-    inter = F.size(F.array_intersect("_ta", "_tb"))
+    inter = F.size(F.array_intersect("_arr_a", "_arr_b"))
     union = sa + sb - inter
     return (
         pairs.withColumn("jaccard", F.round(inter / union.cast("double"), 4))
@@ -585,12 +606,10 @@ def simhash_near_dupes(
         id_col,
         [F.shiftright("simhash", b * rpb).bitwiseAND(F.lit(mask)) for b in range(bands)],
     )
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("_sa"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("_sb"))
+    xor = F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
     return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).alias("hamming"))
+        attach_pairs(cand, sigs, id_col, ["simhash"])
+        .select("id_a", "id_b", F.bit_count(xor).alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -691,53 +710,20 @@ def winnow_containment_pairs(
 ) -> DataFrame:
     """Near-dup/containment pairs from shared winnowed fingerprints:
     (id_a, id_b, shared_fp, containment) where containment =
-    shared / min(|fp_a|, |fp_b|) — the plagiarism-detection metric
-    (robust when one doc embeds the other)."""
+    shared_fp / min(|fp_a|, |fp_b|) — the plagiarism-detection metric
+    (robust when one doc embeds the other). The fingerprint sets go
+    through :func:`containment_pairs`."""
     fps = winnow_fingerprints(df, id_col, text_col, k=k, w=w)
-    # tok/gdf/prefix/full and both verification rejoins all sit above
-    # the fingerprint kernel; one kernel run, one fingerprint array per
-    # doc
+    # the prefix ranking, the full fingerprint stream and both
+    # verification rejoins all sit above the fingerprint kernel; one
+    # kernel run, one fingerprint array per doc
     items = materialize(
         fps.groupBy(id_col)
         .agg(F.collect_set("fp").alias("_arr"))
         .select(F.col(id_col).alias("_id"), "_arr")
     )
-    # Candidate generation: prefix(Jaccard-style, rarity-ranked) on one
-    # side × FULL fingerprint list on the other. Containment's overlap
-    # bound only holds for the SMALLER set (I ≥ c·min), so the smaller
-    # doc's prefix must hit the larger doc's full list; joining
-    # prefix×full in one direction + unordered normalization covers
-    # both assignments. Complete for containment ≥ c; hot fingerprints
-    # never enter a prefix, so no quadratic fan-out.
-    tok, prefix = _rare_prefix(items, min_containment)
-    cands = (
-        prefix.select(F.col("_id").alias("_pid"), "_w")
-        .join(tok.select(F.col("_id").alias("_fid"), "_w"), "_w")
-        .filter(F.col("_pid") != F.col("_fid"))
-        .select(
-            F.least("_pid", "_fid").alias("id_a"),
-            F.greatest("_pid", "_fid").alias("id_b"),
-        )
-        .distinct()
-    )
-    a = items.select(F.col("_id").alias("id_a"), F.col("_arr").alias("_fa"))
-    b = items.select(F.col("_id").alias("id_b"), F.col("_arr").alias("_fb"))
-    shared = F.size(F.array_intersect("_fa", "_fb"))
-    return (
-        _pin_pair_parallelism(cands)
-        .join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("shared_fp", shared)
-        .withColumn(
-            "containment",
-            F.round(
-                F.col("shared_fp")
-                / F.least(F.size("_fa"), F.size("_fb")).cast("double"),
-                4,
-            ),
-        )
-        .filter(F.col("containment") >= min_containment)
-        .select("id_a", "id_b", "shared_fp", "containment")
+    return containment_pairs(items, min_containment).select(
+        "id_a", "id_b", F.col("shared").alias("shared_fp"), "containment"
     )
 
 
@@ -864,9 +850,10 @@ def minhash_near_dupes(
 
 def containment_pairs(items: DataFrame, tau: float) -> DataFrame:
     """Complete candidate+verify pipeline for asymmetric token-set
-    CONTAINMENT: pairs (id_a < id_b) with |A∩B| / min(|A|,|B|) ≥ τ —
-    the subset-duplicate relation Jaccard misses (a doc quoted whole
-    inside a larger one has tiny Jaccard, full containment).
+    CONTAINMENT: (id_a < id_b, shared = |A∩B|, containment) for the
+    pairs with |A∩B| / min(|A|,|B|) ≥ τ — the subset-duplicate relation
+    Jaccard misses (a doc quoted whole inside a larger one has tiny
+    Jaccard, full containment).
 
     Candidates via the ASYMMETRIC prefix filter: C ≥ τ forces
     |A∩B| ≥ τ·|A| for the smaller set A, so if none of A's
@@ -876,7 +863,7 @@ def containment_pairs(items: DataFrame, tau: float) -> DataFrame:
     stream); prefix tokens are globally rare by construction, so the
     fan-out is Σ df(rare) — no hot-token blowup, no all-pairs
     (:func:`_rare_prefix`). Verification is exact ``array_intersect``
-    on candidates only.
+    on candidates only (:func:`attach_pairs`).
 
     ``items`` = (_id, _arr) with DISTINCT elements (same contract as
     :func:`prefix_filter_candidates`).
@@ -898,13 +885,11 @@ def containment_pairs(items: DataFrame, tau: float) -> DataFrame:
         )
         .distinct()
     )
-    a = items.select(F.col("_id").alias("id_a"), F.col("_arr").alias("_ta"))
-    b = items.select(F.col("_id").alias("id_b"), F.col("_arr").alias("_tb"))
-    pairs = _pin_pair_parallelism(cand).join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("_ta", "_tb"))
-    mn = F.least(F.size("_ta"), F.size("_tb"))
+    mn = F.least(F.size("_arr_a"), F.size("_arr_b"))
     return (
-        pairs.withColumn("containment", F.round(inter / mn.cast("double"), 4))
+        attach_pairs(cand, items, "_id", ["_arr"])
+        .withColumn("shared", F.size(F.array_intersect("_arr_a", "_arr_b")))
+        .withColumn("containment", F.round(F.col("shared") / mn.cast("double"), 4))
         .filter(F.col("containment") >= tau)
-        .select("id_a", "id_b", "containment")
+        .select("id_a", "id_b", "shared", "containment")
     )

@@ -83,12 +83,6 @@ def replicate_for_salted_join(small: DataFrame, n: int, col_name: str = "_salt")
     return small.withColumn(col_name, salts)
 
 
-def partition_report(df: DataFrame) -> dict[str, int]:
-    """Partition-count diagnostic (triggers partition planning, cheap)."""
-    n = df.rdd.getNumPartitions()
-    return {"num_partitions": n, "default_parallelism": df.sparkSession.sparkContext.defaultParallelism}
-
-
 def materialize(df: DataFrame) -> DataFrame:
     """Run ``df`` now and return a frame that reads the stored rows.
 
@@ -213,7 +207,7 @@ def _sampled_literal_cuts(df: DataFrame, col: str, n_cuts: int) -> list:
     return sorted({vals[int((i + 1) * step)] for i in range(n_cuts)})
 
 
-#: (plan semantic hash, column, cut count) → boundaries. SAFE to cache
+#: (plan semantic hash, column, parallelism) → boundaries. SAFE to cache
 #: indefinitely: boundaries only place the partition cuts — the stitch's
 #: offsets make the RESULT independent of where they fall, so a stale
 #: entry (same plan, changed underlying files) can only unbalance
@@ -223,13 +217,13 @@ def _sampled_literal_cuts(df: DataFrame, col: str, n_cuts: int) -> list:
 _BOUNDARY_MEMO: dict[tuple[str, int, str, int], list] = {}
 
 
-def _memo_cuts(df: DataFrame, col: str, n_cuts: int, compute, kind: str = "num") -> list:
+def _memo_cuts(df: DataFrame, col: str, compute, kind: str = "num") -> list:
     """In-process cut memoization shared by the numeric (approxQuantile)
     and string (sampled-literal) boundary modes, keyed by the plan's
-    semantic hash (see :data:`_BOUNDARY_MEMO` for why a stale entry is
-    safe)."""
+    semantic hash and the session's parallelism, which fixes the cut
+    count (see :data:`_BOUNDARY_MEMO` for why a stale entry is safe)."""
     try:
-        key = (kind, df.semanticHash(), col, n_cuts)
+        key = (kind, df.semanticHash(), col, df.sparkSession.sparkContext.defaultParallelism)
     except Exception:  # noqa: BLE001 - hashing is an optimization only
         return compute()
     if key in _BOUNDARY_MEMO:
@@ -241,9 +235,8 @@ def _memo_cuts(df: DataFrame, col: str, n_cuts: int, compute, kind: str = "num")
     return b
 
 
-def _memo_boundaries(df: DataFrame, col: str, n_cuts: int) -> list:
-    probs = [i / n_cuts for i in range(1, n_cuts)]
-    return _memo_cuts(df, col, n_cuts, lambda: df.approxQuantile(col, probs, 0.01))
+def _memo_boundaries(df: DataFrame, col: str) -> list:
+    return _memo_cuts(df, col, lambda: range_boundaries(df, col)[0])
 
 
 def _pid_case_sql(enc_sql: str, cuts: list, asc: bool) -> Column:
@@ -426,9 +419,9 @@ def stitched_running(
             # column (memoized by plan semantic hash — boundaries only
             # affect balance)
             if _is_numeric(df, first):
-                cuts = _memo_boundaries(df, first, 4 * n)
+                cuts = _memo_boundaries(df, first)
             else:
-                cuts = _memo_boundaries(df.select(F.expr(enc).alias("_enc")), "_enc", 4 * n)
+                cuts = _memo_boundaries(df.select(F.expr(enc).alias("_enc")), "_enc")
             pid = _pid_case_sql(enc, cuts, asc)
         elif dict(df.dtypes).get(first, "") == "string":
             # strings have no approxQuantile: bounded deterministic
@@ -437,7 +430,7 @@ def stitched_running(
             # memoized like the numeric boundaries so repeated
             # constructions skip the sampling action
             cuts = _memo_cuts(
-                df, first, 2 * n - 1, lambda: _sampled_literal_cuts(df, first, 2 * n - 1), kind="str"
+                df, first, lambda: _sampled_literal_cuts(df, first, 2 * n - 1), kind="str"
             )
             pid = _pid_case_lit(first, cuts, asc)
     if pid is not None:
@@ -619,11 +612,17 @@ def ntile_from_rank(k: int, rank_col: str, n_col: str) -> Column:
     ).cast("int")
 
 
-def range_boundaries(df: DataFrame, col: str, num_partitions: int = 32) -> list:
-    """Approximate equi-depth boundaries for ``stitched_running``'s
-    deterministic-assignment mode: one ``approxQuantile`` pass on the
-    driver (relative error 1%). Boundary skew only unbalances
-    partitions — the stitch's offsets make the RESULT independent of
-    where the cuts fall — so the cheap sketch is always safe."""
-    probs = [i / num_partitions for i in range(1, num_partitions)]
-    return sorted(set(df.approxQuantile(col, probs, 0.01)))
+def range_boundaries(df: DataFrame, *cols: str) -> list[list]:
+    """Approximate equi-depth cut lists for ``stitched_running``'s
+    deterministic-assignment mode, one per column of ``cols``, from ONE
+    ``approxQuantile`` pass on the driver (relative error 1%). The cuts
+    are the ``4n``-quantiles of the stitch's sizing rule, ``n = 2 ×
+    defaultParallelism``. Chained stitches take their cuts from one
+    multi-column call: an auto-derived cut pass per stitch re-executes
+    every upstream stitch inside its own quantile action. Boundary skew
+    only unbalances partitions — the stitch's offsets make the RESULT
+    independent of where the cuts fall — so the cheap sketch is always
+    safe."""
+    n = 2 * df.sparkSession.sparkContext.defaultParallelism
+    probs = [i / (4 * n) for i in range(1, 4 * n)]
+    return [sorted(set(c)) for c in df.approxQuantile(list(cols), probs, 0.01)]

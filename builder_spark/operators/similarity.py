@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from builder_spark.functions.vectors import dot_f64, l2_norm
-from builder_spark.operators.dedup import band_candidates
+from builder_spark.operators.dedup import attach_pairs, band_candidates
 from builder_spark.operators.partitioning import materialize
 
 
@@ -439,8 +439,9 @@ def embedding_near_dupes_lsh(
     OR-construction that trades plane count per band (precision) against
     band count (recall). Candidate generation explodes ONLY
     (id, band, bucket) — 24-byte rows, never the embedding — and
-    self-joins on (band, bucket); embeddings join back by id afterwards,
-    so the wide vectors cross exactly two hash joins keyed on the id.
+    self-joins on (band, bucket); embeddings join back by id afterwards
+    (:func:`~builder_spark.operators.dedup.attach_pairs`), so the wide
+    vectors cross exactly two hash joins keyed on the id.
     No BroadcastNestedLoopJoin anywhere (plan-tested).
 
     Approximate by design: a qualifying pair whose buckets disagree in
@@ -455,21 +456,11 @@ def embedding_near_dupes_lsh(
         df.select(F.col(id_col), F.col(vec_col)), planes, n_bands, vec_col
     ).drop(vec_col))
     cand = band_candidates(bk, id_col, [F.col(f"_b{i}") for i in range(n_bands)])
-    n = df.select(F.col(id_col), F.col(vec_col), l2_norm(vec_col).alias("_nrm"))
-    scored = cand.join(
-        n.select(
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("_ea"), F.col("_nrm").alias("_na")
-        ),
-        "id_a",
-    ).join(
-        n.select(
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("_eb"), F.col("_nrm").alias("_nb")
-        ),
-        "id_b",
-    )
-    sim = dot_f64("_ea", "_eb") / (F.col("_na") * F.col("_nb"))
+    n = df.select(F.col(id_col), F.col(vec_col).alias("_e"), l2_norm(vec_col).alias("_n"))
+    sim = dot_f64("_e_a", "_e_b") / (F.col("_n_a") * F.col("_n_b"))
     return (
-        scored.withColumn("cos_sim", F.round(sim, 4))
+        attach_pairs(cand, n, id_col, ["_e", "_n"])
+        .withColumn("cos_sim", F.round(sim, 4))
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )

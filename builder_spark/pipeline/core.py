@@ -746,6 +746,43 @@ class BuildGraph:
 # PrintExecutor, ExecutionManager)
 
 
+def _build_context(spark, cj: ConcreteJob) -> BuildContext:
+    """The job's :class:`BuildContext`, shared by every executor so a
+    dry run reads exactly the paths a real run reads."""
+
+    def dep_path(t: Target) -> str:
+        if not isinstance(t, VersionedTableTarget):
+            return t.unique_id
+        # consumers of a versioned dep read its CURRENT snapshot's data
+        # path, never the table root: the root accumulates
+        # uniquely-named staging dirs (live writers, crashed writers),
+        # so a root read would return duplicated rows
+        p = t.read_path()
+        if p is None:
+            raise RuntimeError(
+                f"versioned dep {t.unique_id} has a committed manifest "
+                "with no data_path — nothing readable to build from"
+            )
+        return p
+
+    return BuildContext(
+        spark=spark,
+        start=cj.start,
+        end=cj.end,
+        dep_paths={
+            pat: [dep_path(t) for t in tgts if t.exists] for pat, tgts in cj.dep_targets.items()
+        },
+        target_path=(
+            # unique per-writer staging dir: concurrent writers on the
+            # same table never share a data directory; the manifest
+            # (put-if-absent) is the only contended slot
+            cj.target.stage_data_path()
+            if isinstance(cj.target, VersionedTableTarget)
+            else cj.target.unique_id
+        ),
+    )
+
+
 class SparkExecutor:
     """Runs the job fn and writes its DataFrame to the target path."""
 
@@ -753,42 +790,11 @@ class SparkExecutor:
         self.spark = spark
 
     def execute(self, cj: ConcreteJob) -> None:
-        versioned = isinstance(cj.target, VersionedTableTarget)
-
-        def dep_path(t: Target) -> str:
-            if not isinstance(t, VersionedTableTarget):
-                return t.unique_id
-            # consumers of a versioned dep read its CURRENT snapshot's
-            # data path, never the table root: the root accumulates
-            # uniquely-named staging dirs (live writers, crashed
-            # writers), so a root read would return duplicated rows
-            p = t.read_path()
-            if p is None:
-                raise RuntimeError(
-                    f"versioned dep {t.unique_id} has a committed manifest "
-                    "with no data_path — nothing readable to build from"
-                )
-            return p
-
-        ctx = BuildContext(
-            spark=self.spark,
-            start=cj.start,
-            end=cj.end,
-            dep_paths={
-                pat: [dep_path(t) for t in tgts if t.exists]
-                for pat, tgts in cj.dep_targets.items()
-            },
-            target_path=(
-                # unique per-writer staging dir: concurrent writers on
-                # the same table never share a data directory; the
-                # manifest (put-if-absent) is the only contended slot
-                cj.target.stage_data_path() if versioned else cj.target.unique_id
-            ),
-        )
+        ctx = _build_context(self.spark, cj)
         df = cj.job.run(ctx)
         if df is not None:
             df.write.mode("overwrite").parquet(ctx.target_path)
-        if versioned:
+        if isinstance(cj.target, VersionedTableTarget):
             # data is on disk but INVISIBLE until this manifest lands —
             # a crash before commit leaves no snapshot (no _SUCCESS
             # half-written-directory hazard). The manifest records each
@@ -811,17 +817,7 @@ class PrintExecutor:
         self.printed: list[str] = []
 
     def execute(self, cj: ConcreteJob) -> None:
-        ctx = BuildContext(
-            spark=self.spark,
-            start=cj.start,
-            end=cj.end,
-            dep_paths={
-                pat: [t.unique_id for t in tgts if t.exists]
-                for pat, tgts in cj.dep_targets.items()
-            },
-            target_path=cj.target.unique_id,
-        )
-        df = cj.job.run(ctx)
+        df = cj.job.run(_build_context(self.spark, cj))
         desc = f"DRY-RUN {cj.unique_id} -> {cj.target.unique_id}"
         if df is not None:
             try:

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from builder_spark.catalog import load_table
-from builder_spark.operators.partitioning import stitched_running
+from builder_spark.operators.partitioning import range_boundaries, stitched_running
 from builder_spark.registry import register
 
 
@@ -884,8 +884,7 @@ def q_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one multi-column quantile pass supplies both stitches' boundaries
     # (chained auto-boundary stitches would re-execute the first stitch
     # inside the second's quantile action)
-    probs = [i / 32 for i in range(1, 32)]
-    b_a, b_b = rev.approxQuantile(["rev_a", "rev_b"], probs, 0.01)
+    b_a, b_b = range_boundaries(rev, "rev_a", "rev_b")
     rk = stitched_running(
         rev,
         [F.col("rev_a").desc(), F.col("l_partkey").asc()],

@@ -437,18 +437,17 @@ def q_neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     is computed ONLY on the bounded candidate set (array_intersect per
     pair), and thresholds are integer percents so the group key is
     never a float. Composes the registered q_minhash_banded oracle."""
+    from builder_spark.operators.dedup import attach_pairs
     from builder_spark.queries.textops import _word_grams, q_minhash_banded
 
     pairs = q_minhash_banded(spark, sf_dir).select("id_a", "id_b", "est_jaccard")
     d = load_table(spark, sf_dir, "documents")
     _wg_proj, _wg = _word_grams(F.col("text"), 3)
     sh = d.select("doc_id", _wg_proj).select("doc_id", _wg.alias("g"))
-    inter = F.size(F.array_intersect("ga", "gb"))
-    union = F.size("ga") + F.size("gb") - inter
-    scored = (
-        pairs.join(sh.select(F.col("doc_id").alias("id_a"), F.col("g").alias("ga")), "id_a")
-        .join(sh.select(F.col("doc_id").alias("id_b"), F.col("g").alias("gb")), "id_b")
-        .select("est_jaccard", (inter / union.cast("double")).alias("exact_j"))
+    inter = F.size(F.array_intersect("g_a", "g_b"))
+    union = F.size("g_a") + F.size("g_b") - inter
+    scored = attach_pairs(pairs, sh, "doc_id", ["g"]).select(
+        "est_jaccard", (inter / union.cast("double")).alias("exact_j")
     )
     taus = spark.createDataFrame([(t,) for t in (50, 60, 70, 80, 90)], "tau_pct int")
     thr = F.col("tau_pct") / F.lit(100.0)

@@ -198,7 +198,7 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("_id"),
         F.array_distinct(tokens("text")).alias("_arr"),
     )
-    return containment_pairs(items, _CT_TAU)
+    return containment_pairs(items, _CT_TAU).drop("shared")
 
 
 # ---------------------------------------------------------------------------

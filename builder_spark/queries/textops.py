@@ -27,6 +27,7 @@ from builder_spark.catalog import load_table
 from builder_spark.functions.hashing import knuth_bucket
 from builder_spark.operators.dedup import (
     CHARFOLD_MOD,
+    attach_pairs,
     band_candidates,
     charfold_hash,
 )
@@ -146,8 +147,8 @@ def q_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the old array_min/transform expression form,
     which interpreted one lambda per shingle×permutation) →
     ``band_candidates`` (band-explode to 4 rows/doc, self-equi-join on
-    (band, bucket), distinct pairs) → signature rejoin. No O(n²) stage
-    anywhere."""
+    (band, bucket), distinct pairs) → signature rejoin
+    (``attach_pairs``). No O(n²) stage anywhere."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from builder_spark.operators.arrowkern import charfold_sig_gen
@@ -163,23 +164,20 @@ def q_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("doc_id", LongType())]
         + [StructField(f"s{i}", LongType()) for i in range(_K)]
     )
-    # four consumers (band sides a/b + signature rejoins x/y): a
-    # repartition boundary re-ran the kernel 4 times; materialized, one
-    # kernel run, 8 longs per doc.
+    # four consumers (band sides a/b + attach_pairs' two signature
+    # rejoins): a repartition boundary re-ran the kernel 4 times;
+    # materialized, one kernel run, 8 longs per doc.
     sig = materialize(
         spread(d.filter(F.size(toks) >= 3))
         .select("doc_id", "text")
         .mapInArrow(charfold_sig_gen(3, _A, _B, _P, "doc_id"), _sig_schema)
     )
     pairs = band_candidates(sig, "doc_id", _band_buckets())
-    x = sig.alias("x")
-    y = sig.alias("y")
     n_match = sum(
-        F.when(F.col(f"x.s{i}") == F.col(f"y.s{i}"), 1).otherwise(0) for i in range(_K)
+        F.when(F.col(f"s{i}_a") == F.col(f"s{i}_b"), 1).otherwise(0) for i in range(_K)
     )
     return (
-        pairs.join(x, F.col("id_a") == F.col("x.doc_id"))
-        .join(y, F.col("id_b") == F.col("y.doc_id"))
+        attach_pairs(pairs, sig, "doc_id", [f"s{i}" for i in range(_K)])
         .select(
             "id_a",
             "id_b",
@@ -1283,17 +1281,10 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     _wg_proj, _wg = _word_grams(F.col("text"), 3)
     sh = d.select("doc_id", _wg_proj).select("doc_id", _wg.alias("g"))
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("g").alias("ga"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("g").alias("gb"))
-    inter = F.size(F.array_intersect("ga", "gb"))
-    union = F.size("ga") + F.size("gb") - inter
-    scored = (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "est_jaccard",
-            (inter / union.cast("double")).alias("exact_j"),
-        )
+    inter = F.size(F.array_intersect("g_a", "g_b"))
+    union = F.size("g_a") + F.size("g_b") - inter
+    scored = attach_pairs(pairs, sh, "doc_id", ["g"]).select(
+        "est_jaccard", (inter / union.cast("double")).alias("exact_j")
     )
     err = F.col("est_jaccard") - F.col("exact_j")
     return scored.agg(

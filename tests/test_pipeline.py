@@ -673,6 +673,41 @@ def test_versioned_spark_pipeline_end_to_end(spark, tmp_path):
     assert spark.read.parquet(out.read_path()).collect()[0]["s"] == 10
 
 
+def test_dry_run_reads_the_versioned_dep_snapshot(spark, tmp_path):
+    """PrintExecutor resolves a vt:// dependency to its current
+    snapshot's data path, exactly as SparkExecutor does: the dry run of
+    a job that reads the dep runs, and its plan scans the snapshot."""
+    from pyspark.sql import functions as F
+
+    from builder_spark.pipeline import make_target
+
+    src = make_target(f"vt://{tmp_path}/src")
+    path = src.stage_data_path()
+    spark.range(3).select(F.col("id").alias("v")).write.parquet(path)
+    src.commit(data_path=path)
+
+    def summarize(ctx):
+        [dep_path] = ctx.dep_paths[f"vt://{tmp_path}/src"]
+        return ctx.spark.read.parquet(dep_path).agg(F.sum("v").alias("s"))
+
+    bm = BuildManager()
+    bm.add(
+        Job(
+            name="sum",
+            run=summarize,
+            targets=f"vt://{tmp_path}/out",
+            depends=[f"vt://{tmp_path}/src"],
+        )
+    )
+    pe = PrintExecutor(spark)
+    r = ExecutionManager(bm, pe).start_execution(D0, D0 + timedelta(days=1))
+    assert r[f"sum@{D0.isoformat()}"] == "ran"
+    [desc] = pe.printed
+    assert os.path.basename(path).startswith("data-v00000001-")
+    assert os.path.basename(path) in desc
+    assert not make_target(f"vt://{tmp_path}/out").exists
+
+
 # --- cross-run job-state journal + failure backoff --------------------------
 
 

@@ -580,7 +580,7 @@ def test_stitched_running_explicit_boundaries_matches_naive(spark):
         F.sum("v").over(w).cast("bigint").alias("rv"),
         F.count(F.lit(1)).over(w).cast("bigint").alias("rn"),
     )
-    good = range_boundaries(df, "o_orderkey", 8)
+    (good,) = range_boundaries(df, "o_orderkey")
     bad = [2, 3, 5]  # pathological: nearly everything lands in one bucket
     for bounds in (good, bad):
         got = stitched_running(
@@ -863,6 +863,82 @@ def test_containment_candidates_are_equi_joins(spark):
     df = REGISTRY["q_containment_dedup"].fn(spark, SF_DIR)
     plan = formatted_plan(df)
     assert "BroadcastNestedLoopJoin" not in plan, "all-pairs join leaked in"
+
+
+def _verifier_plan(spark, name: str):
+    """The pair DataFrame of one near-duplicate verifier on the sf0.001
+    documents (or embeddings)."""
+    from builder_spark.operators import dedup
+    from builder_spark.operators.similarity import embedding_near_dupes_lsh
+
+    d = load_table(spark, SF_DIR, "documents")
+    if name == "jaccard_pairs":
+        sigs = dedup.minhash_signatures(d, "doc_id", "text")
+        cands = dedup.minhash_lsh_candidates(sigs, "doc_id")
+        return dedup.jaccard_pairs(d, "doc_id", "text", 0.5, candidates=cands)
+    if name == "containment_pairs":
+        items = d.select(
+            F.col("doc_id").alias("_id"), F.array_distinct(F.split("text", " ")).alias("_arr")
+        )
+        return dedup.containment_pairs(items, 0.9)
+    if name == "winnow_containment_pairs":
+        return dedup.winnow_containment_pairs(d, "doc_id", "text", min_containment=0.8)
+    if name == "simhash_near_dupes":
+        return dedup.simhash_near_dupes(d, "doc_id", "text")
+    if name == "embedding_near_dupes_lsh":
+        return embedding_near_dupes_lsh(load_table(spark, SF_DIR, "embeddings"))
+    return REGISTRY[name].fn(spark, SF_DIR)
+
+
+def _subtree(lines: list[str], i: int) -> range:
+    """Line indices of the children of tree-string node ``i``."""
+
+    def depth(s: str) -> int:
+        return len(s) - len(s.lstrip(" :+-"))
+
+    j = i + 1
+    while j < len(lines) and depth(lines[j]) > depth(lines[i]):
+        j += 1
+    return range(i + 1, j)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "jaccard_pairs",
+        "containment_pairs",
+        "winnow_containment_pairs",
+        "simhash_near_dupes",
+        "embedding_near_dupes_lsh",
+        "q_minhash_banded",
+    ],
+)
+def test_verifier_pins_pairs_below_the_id_joins(spark, name):
+    """Every near-duplicate verifier attaches its side columns through
+    one REPARTITION_BY_NUM pin of the candidate pairs, hashed on
+    xxhash64(id_a, id_b) into defaultParallelism partitions, under both
+    id joins (id_b's join above id_a's): the pair distinct is byte-tiny,
+    so without the pin AQE coalesces the per-pair verify work onto a few
+    tasks."""
+    import re
+
+    from builder_spark.plans.inspect import executed_plan
+
+    plan = executed_plan(_verifier_plan(spark, name))
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    n = spark.sparkContext.defaultParallelism
+    pin = rf"hashpartitioning\(xxhash64\(id_a#\d+L?, id_b#\d+L?, 42\), {n}\), REPARTITION_BY_NUM"
+    pins = [i for i, s in enumerate(final) if re.search(pin, s)]
+    assert len(pins) == 1, f"{name}: {len(pins)} pair pins in\n{plan}"
+
+    def join_on(key: str) -> int:
+        hits = [i for i, s in enumerate(final) if re.search(rf"Join \[{key}#", s)]
+        assert len(hits) == 1, f"{name}: {len(hits)} joins keyed on {key}"
+        return hits[0]
+
+    by_b, by_a = join_on("id_b"), join_on("id_a")
+    assert by_a in _subtree(final, by_b), f"{name}: id_a join not under id_b join"
+    assert pins[0] in _subtree(final, by_a), f"{name}: pin not under the id joins"
 
 
 def test_survival_km_scalar_broadcast_only(spark):

@@ -424,6 +424,53 @@ def test_containment_pairs_complete_vs_brute_force(spark, docs, tau):
     assert got == want
 
 
+def test_winnow_containment_pairs_complete_vs_brute_force(spark):
+    """winnow_containment_pairs must return EXACTLY the brute-force
+    shared / min(|A|,|B|) ≥ τ pairs over the same winnow_fingerprints
+    sets, shared counts included. The corpus plants copies of short
+    docs inside longer unrelated text (containment near 1, Jaccard
+    small) next to lightly edited copies and unrelated docs."""
+    import random
+
+    from builder_spark.operators.dedup import winnow_containment_pairs, winnow_fingerprints
+
+    rng = random.Random(11)
+    vocab = [
+        "alpha", "bravo", "delta", "echo", "golf", "hotel", "india", "kilo",
+        "lima", "mike", "oscar", "papa", "romeo", "sierra", "tango", "victor",
+    ]
+
+    def words(n):
+        return " ".join(rng.choice(vocab) for _ in range(n))
+
+    base = [words(rng.randint(6, 12)) for _ in range(6)]
+    docs = list(base)
+    for i, b in enumerate(base[:4]):
+        docs.append(f"{words(8)} {b} {words(10)}")  # embedded whole
+        docs.append(b.replace(" ", "  ", 1) + f" {vocab[i]}")  # light edit
+    docs += [words(15) for _ in range(4)]
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
+    fps: dict[int, set] = {}
+    for r in winnow_fingerprints(df, "doc_id", "text").collect():
+        fps.setdefault(r["doc_id"], set()).add(r["fp"])
+    for tau in (0.5, 0.8):
+        got = {
+            (r["id_a"], r["id_b"], r["shared_fp"], r["containment"])
+            for r in winnow_containment_pairs(df, "doc_id", "text", tau).collect()
+        }
+        want = set()
+        for a in fps:
+            for b in fps:
+                if a < b:
+                    shared = len(fps[a] & fps[b])
+                    c = round(shared / min(len(fps[a]), len(fps[b])), 4)
+                    if c >= tau:
+                        want.add((a, b, shared, c))
+        planted = {(i, 6 + 2 * i) for i in range(4)}
+        assert planted <= {(a, b) for a, b, _, _ in want}
+        assert got == want
+
+
 @_settings
 @given(data=rows)
 def test_grouped_stitch_matches_partitioned_window(spark, data):

@@ -10,7 +10,7 @@ cost curves matter — joins, dedup, vector top-k, sessionization. A roughly-lin
 the evidence that the plans scale; superlinear blowup flags an
 operator whose shuffle or fan-out is size-sensitive.
 
-Usage: python tools/scale_smoke.py [N]   # default N=10
+Usage: python tools/scale_smoke.py [N] [query ...]   # default N=10, HEAVY
 Writes one JSON line, mirroring bench.py's shape.
 """
 
@@ -427,19 +427,19 @@ def build_scaled(spark, src_dir: str, n: int, out_dir: str) -> None:
 
 
 def main() -> None:
-    # usage: scale_smoke.py [N] [query ...] — names restrict the run to
-    # a subset of HEAVY (for iterating on one operator without
-    # re-timing the whole list); the 10x corpus is cached either way
+    # usage: scale_smoke.py [N] [query ...] — names replace HEAVY with
+    # any registered queries (for iterating on one operator without
+    # re-timing the whole list); the Nx corpus is cached either way
     args = sys.argv[1:]
     n = int(args.pop(0)) if args and args[0].isdigit() else 10
     heavy = args or HEAVY
-    unknown = [q for q in heavy if q not in HEAVY]
+    registry = load_all()
+    unknown = [q for q in heavy if q not in registry]
     if unknown:
-        raise SystemExit(f"not in HEAVY list: {unknown}")
+        raise SystemExit(f"not registered: {unknown}")
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(tempfile.gettempdir(), f"bs_scale_{n}x")
     spark = get_spark("builder-spark-scale-smoke")
-    registry = load_all()
 
     ready = os.path.join(out_dir, "_READY")
     try:
