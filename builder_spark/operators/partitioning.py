@@ -30,18 +30,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def spread(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:
-    """Repartition UP to ``target`` (default: cluster parallelism) when
-    the input is under-partitioned; no-op otherwise.
-
-    With ``keys``, hash-partitions on them — downstream groupBy/join on
-    the same keys then reuses the exchange instead of adding one.
-    Without keys, round-robin for even load.
-    """
-    target = target or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+def spread(df: DataFrame, key: str, *keys: str) -> DataFrame:
+    """Hash-partition on ``key`` (and ``keys``) UP to the cluster's
+    parallelism when the input is under-partitioned; no-op otherwise.
+    A downstream groupBy/join on the same keys then reuses the exchange
+    instead of adding one."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= n:
         return df
-    return df.repartition(target, *[F.col(k) for k in keys]) if keys else df.repartition(target)
+    return df.repartition(n, *[F.col(k) for k in (key, *keys)])
 
 
 def with_salt(df: DataFrame, n: int, col_name: str = "_salt") -> DataFrame:
@@ -123,16 +120,16 @@ def release(df: DataFrame) -> None:
 
 def _simple_order(c: str | Column) -> tuple[str, bool] | None:
     """(column name, is_ascending) when the order expression is a bare
-    column with default null ordering — the shapes the deterministic
-    auto-boundary mode can serve. None for anything else (complex
-    expressions, custom NULLS placement) → sampled-range fallback."""
+    column with default null ordering — the only shape
+    ``stitched_running`` accepts. None for anything else (complex
+    expressions, custom NULLS placement)."""
     import re
 
     if isinstance(c, str):
         return c, True
     try:
         s = c._jc.toString()
-    except Exception:  # noqa: BLE001 - conservatively fall back
+    except Exception:  # noqa: BLE001 - unrenderable: not a bare column
         return None
     m = re.fullmatch(r"([A-Za-z_][A-Za-z0-9_]*)", s)
     if m:
@@ -146,21 +143,14 @@ def _simple_order(c: str | Column) -> tuple[str, bool] | None:
     return None
 
 
-def _is_numeric(df: DataFrame, col: str) -> bool:
-    dt = dict(df.dtypes).get(col, "")
-    return dt in ("tinyint", "smallint", "int", "bigint", "float", "double") or dt.startswith(
-        "decimal"
-    )
-
-
 def _numeric_encoding_sql(df: DataFrame, col: str) -> str | None:
     """SQL rendering of an ORDER-PRESERVING numeric encoding of a bare
-    column, so non-numeric order keys can still use the deterministic
-    auto-boundary mode (one approxQuantile pass + literal CASE pid).
-    None when no such encoding exists (strings go through the sampled
-    literal-cut path instead)."""
+    column, which the stitch's boundaries and pid are taken over. None
+    when no such encoding exists (strings, nested types)."""
     dt = dict(df.dtypes).get(col, "")
-    if _is_numeric(df, col):
+    if dt in ("tinyint", "smallint", "int", "bigint", "float", "double") or dt.startswith(
+        "decimal"
+    ):
         return f"`{col}`"
     if dt == "date":
         return f"unix_date(`{col}`)"
@@ -174,69 +164,37 @@ def _numeric_encoding_sql(df: DataFrame, col: str) -> str | None:
     return None
 
 
-def _sampled_literal_cuts(df: DataFrame, col: str, n_cuts: int) -> list:
-    """Bounded, single-action cut sample for orderable columns with no
-    numeric encoding (strings): hash-filter to ~1/64 of the DISTINCT
-    value mass, cap the collect at 100k rows (LocalLimit short-circuits
-    the scan), sort driver-side, take equi-spaced cuts. Cut quality only
-    affects partition BALANCE — the stitch's offsets make the result
-    independent of where the cuts fall — so an empty or skewed sample
-    degrades parallelism, never correctness. The cuts are embedded as
-    plan literals, so every subplan and re-execution agrees on the pid
-    assignment by construction.
-
-    The sample collects a 64-char PREFIX, not the full value: pid
-    (count of cuts ≤ v) is monotone in v for ANY fixed literal cut
-    set, so a truncated cut is exactly as correct as a full one — it
-    only merges values sharing a 64-char prefix into one partition —
-    and it bounds both driver memory and the literal size embedded in
-    the plan when the order key is a long text column. The hash
-    filter keys on the PREFIX too, so the 1/64 thinning is of the
-    prefix mass the cuts are drawn from."""
-    rows = (
-        df.select(F.substring(F.col(col), 1, 64).alias("_c"))
-        .filter(F.col("_c").isNotNull())
-        .filter(F.pmod(F.xxhash64("_c"), F.lit(64)) == 0)
-        .limit(100_000)
-        .collect()
-    )
-    vals = sorted({r["_c"] for r in rows})
-    if len(vals) <= n_cuts:
-        return vals
-    step = len(vals) / (n_cuts + 1)
-    return sorted({vals[int((i + 1) * step)] for i in range(n_cuts)})
+#: (plan semantic hash, encoded column, parallelism) → boundaries. SAFE
+#: to cache indefinitely: boundaries only place the partition cuts — the
+#: stitch's offsets make the RESULT independent of where they fall, so a
+#: stale entry (same plan, changed underlying files) can only unbalance
+#: partitions, never corrupt values. Bounded. It stays because repeated
+#: constructions of one query (warm benches, interactive sessions) skip
+#: the approxQuantile action: rebuilding the 78 stitched registry
+#: queries at sf0.01 on a 4-core host with a warm memo instead of a
+#: cleared one saved a median of 0.17 s per construction (best of two
+#: each; e.g. ``q_weighted_median`` 0.30 → 0.11 s).
+_BOUNDARY_MEMO: dict[tuple[int, str, int], list] = {}
 
 
-#: (plan semantic hash, column, parallelism) → boundaries. SAFE to cache
-#: indefinitely: boundaries only place the partition cuts — the stitch's
-#: offsets make the RESULT independent of where they fall, so a stale
-#: entry (same plan, changed underlying files) can only unbalance
-#: partitions, never corrupt values. Bounded; repeated constructions of
-#: the same query (warm benches, interactive sessions) skip the
-#: approxQuantile action entirely.
-_BOUNDARY_MEMO: dict[tuple[str, int, str, int], list] = {}
+def _memo_boundaries(df: DataFrame, enc: str) -> list:
+    """:func:`range_boundaries` over the SQL expression ``enc`` of
+    ``df``, memoized in-process by the plan's semantic hash and the
+    session's parallelism, which fixes the cut count (see
+    :data:`_BOUNDARY_MEMO` for why a stale entry is safe)."""
 
+    def compute() -> list:
+        return range_boundaries(df.select(F.expr(enc).alias("_enc")), "_enc")[0]
 
-def _memo_cuts(df: DataFrame, col: str, compute, kind: str = "num") -> list:
-    """In-process cut memoization shared by the numeric (approxQuantile)
-    and string (sampled-literal) boundary modes, keyed by the plan's
-    semantic hash and the session's parallelism, which fixes the cut
-    count (see :data:`_BOUNDARY_MEMO` for why a stale entry is safe)."""
     try:
-        key = (kind, df.semanticHash(), col, df.sparkSession.sparkContext.defaultParallelism)
+        key = (df.semanticHash(), enc, df.sparkSession.sparkContext.defaultParallelism)
     except Exception:  # noqa: BLE001 - hashing is an optimization only
         return compute()
-    if key in _BOUNDARY_MEMO:
-        return _BOUNDARY_MEMO[key]
-    b = compute()
-    if len(_BOUNDARY_MEMO) >= 256:
-        _BOUNDARY_MEMO.clear()
-    _BOUNDARY_MEMO[key] = b
-    return b
-
-
-def _memo_boundaries(df: DataFrame, col: str) -> list:
-    return _memo_cuts(df, col, lambda: range_boundaries(df, col)[0])
+    if key not in _BOUNDARY_MEMO:
+        if len(_BOUNDARY_MEMO) >= 256:
+            _BOUNDARY_MEMO.clear()
+        _BOUNDARY_MEMO[key] = compute()
+    return _BOUNDARY_MEMO[key]
 
 
 def _pid_case_sql(enc_sql: str, cuts: list, asc: bool) -> Column:
@@ -275,24 +233,6 @@ def _pid_case_sql(enc_sql: str, cuts: list, asc: bool) -> Column:
     return F.expr(go(0, len(cuts)))
 
 
-def _pid_case_lit(col: str, cuts: list, asc: bool) -> Column:
-    """Column-API twin of :func:`_pid_case_sql` for cut values that are
-    not safely renderable as SQL literals (strings): ``F.lit`` carries
-    arbitrary values with no escaping hazard. Same binary-search CASE
-    shape (log2(k) comparisons per row); NULL fall-through places
-    NULLs on pid 0 (ASC) / pid len(cuts) (DESC) like the SQL twin."""
-    cuts = sorted(set(cuts))
-
-    def go(lo: int, hi: int) -> Column:
-        if lo == hi:
-            return F.lit(lo if asc else len(cuts) - lo)
-        mid = (lo + hi) // 2
-        cmp = (F.col(col) >= F.lit(cuts[mid])) if asc else (F.col(col) > F.lit(cuts[mid]))
-        return F.when(cmp, go(mid + 1, hi)).otherwise(go(lo, mid))
-
-    return go(0, len(cuts))
-
-
 def stitched_running(
     df: DataFrame,
     order_cols: list[str | Column],
@@ -300,7 +240,6 @@ def stitched_running(
     rank_name: str | None = None,
     partition_cols: list[str] | None = None,
     boundaries: list | None = None,
-    running_min: dict[str, str | Column] | None = None,
     running_min_excl: dict[str, str | Column] | None = None,
     with_totals: bool = False,
 ) -> DataFrame:
@@ -308,12 +247,9 @@ def stitched_running(
     single-partition window — the scale pattern for every empty
     PARTITION-BY frame over fact-grain data.
 
-    1. Rows get a partition id that is monotone in the total order —
-       a deterministic count-of-boundaries-passed expression (equal
-       keys never split across ids; see the boundary strategies
-       below), falling back to ``repartitionByRange`` +
-       ``spark_partition_id()`` when no bare numeric first order
-       column exists.
+    1. Rows get a partition id that is monotone in the total order — a
+       deterministic count-of-boundaries-passed expression (equal keys
+       never split across ids; see the boundary rule below).
     2. A LOCAL window per partition id computes within-partition
        running sums and row counts: all partitions work independently.
     3. Per-partition totals (one row per partition id) cumsum into
@@ -321,63 +257,48 @@ def stitched_running(
        whose size equals the partition COUNT — broadcast back.
     4. global = local + offset of all earlier partitions.
 
-    The result is independent of where the range boundaries fall
-    (offsets absorb any split).
+    The result is independent of where the boundaries fall (offsets
+    absorb any split).
 
     Sizing, one rule: ``n = 2 × defaultParallelism`` pinned shuffle
     partitions, so every core gets work and AQE cannot coalesce the
-    row-CPU-bound local window onto a few tasks. Numeric cuts are
-    ``4n`` (about four pid values hash into each shuffle partition,
-    which evens out their uneven placement), string cuts ``2n − 1``,
-    and the range fallback uses ``n`` ranges. At small inputs the
+    row-CPU-bound local window onto a few tasks. Auto-derived cuts are
+    ``4n``: about four pid values hash into each shuffle partition,
+    which evens out their uneven placement. At small inputs the
     stitch's cost is per task, so the count follows the session, not
     the data.
 
-    NOTHING IS PERSISTED in any mode — a long-lived session running
-    dozens of stitched queries pins no storage (the r4 lifecycle fix).
-    Three boundary strategies:
+    NOTHING IS PERSISTED — a long-lived session running dozens of
+    stitched queries pins no storage.
 
-    - default (``boundaries=None``), bare first order column of a
-      numeric / date / timestamp / boolean type: boundaries are
-      AUTO-DERIVED by one ``approxQuantile`` pass over an
-      order-preserving numeric encoding of that column (column-pruned
-      scan, 1% relative error, ``4n`` cuts), and the partition id becomes
-      a DETERMINISTIC expression — count of boundaries passed by the
-      first order column (reversed for a DESC first column; NULLs land
-      on the sort-order end). Both subplans then compute identical
-      assignments with no exchange consistency requirement at all.
-      Boundary quality only affects balance, never correctness (the
-      offsets absorb any split).
-    - default, bare STRING first order column: same deterministic
-      literal-cut construction, with cuts taken from a bounded
-      hash-sampled collect (``_sampled_literal_cuts``) instead of
-      ``approxQuantile`` (which is numeric-only).
-    - default, complex first order expression or custom NULLS
-      placement: fall back to ``repartitionByRange`` (sampled
-      boundaries). The local-window and offsets subplans SHARE the
-      range exchange node, so with ``spark.sql.exchange.reuse=true``
-      (Spark's default) it executes once and the pid assignment is
-      consistent by construction; with reuse disabled this mode
-      raises instead of risking two executions sampling different
-      boundaries. Project the expression to a plain column to get the
-      deterministic mode.
-    - ``boundaries=[...]`` (e.g. from :func:`range_boundaries`):
-      explicit NUMERIC cuts, same deterministic expression as the
-      auto mode (bare first order column only).
+    The boundary rule. The first order item must be a bare column, ASC
+    or DESC with default null ordering, of a numeric, date, timestamp
+    or boolean type; anything else raises ``ValueError`` (project the
+    expression to such a column first). The partition id is the count
+    of cuts passed by an order-preserving numeric encoding of that
+    column (reversed for DESC; NULLs land on the sort-order end). The
+    cuts are ``boundaries`` when given (e.g. from
+    :func:`range_boundaries`; values of the encoding, which for numeric
+    columns is the column itself), else ``4n`` cuts from one memoized
+    ``approxQuantile`` pass over the encoded column (column-pruned
+    scan, 1% relative error). The cuts are plan literals, so both
+    subplans compute identical assignments with no exchange
+    consistency requirement at all.
 
     With ``partition_cols``, the running sums and rank restart per
     group — the stitched form of ``PARTITION BY g ORDER BY ...`` where
     the group cardinality is far below the cluster's parallelism (a
     3-value key would otherwise sort a third of the table on one
-    reducer). Ranges are taken over (group, order) so a group's rows
-    stay contiguous; offsets are per (partition, group) and the prefix
-    runs within each group over the partition order.
+    reducer). The pid depends on the order column only, so it is
+    monotone within every group too; offsets are per (pid, group) and
+    the prefix runs within each group over the pid order.
 
     Returns ``df`` plus one ``bigint`` column per ``running`` entry
     (global inclusive running sum in total order), one column per
-    ``running_min`` entry (global inclusive running MIN — stitched as
-    least(local min, min of earlier partitions' minima); type
-    preserved), and, if ``rank_name``, the global 1-based row number.
+    ``running_min_excl`` entry (global running MIN over the rows
+    strictly before, stitched as least(local min, min of earlier
+    partitions' minima); type preserved, NULL on a group's first
+    row), and, if ``rank_name``, the global 1-based row number.
 
     ``with_totals=True`` additionally returns the GLOBAL (per-group)
     totals — ``{out}_total`` for each running sum and
@@ -389,108 +310,37 @@ def stitched_running(
     from pyspark.sql import Window
 
     running = running or {}
-    running_min = running_min or {}
     running_min_excl = running_min_excl or {}
-    overlap = (set(running) & set(running_min) | set(running) & set(running_min_excl)
-               | set(running_min) & set(running_min_excl))
+    overlap = set(running) & set(running_min_excl)
     if overlap:
-        # both min flavors write the same _locm_{out} local column, so a
-        # shared output name would silently return wrong values
         raise ValueError(f"output names must be unique across running/"
-                         f"running_min/running_min_excl: {sorted(overlap)}")
+                         f"running_min_excl: {sorted(overlap)}")
+    simple = _simple_order(order_cols[0])
+    enc = _numeric_encoding_sql(df, simple[0]) if simple else None
+    if enc is None:
+        raise ValueError(
+            f"stitched_running's first order item {order_cols[0]!r} must be a "
+            "bare column, ASC or DESC with default null ordering, of a "
+            "numeric, date, timestamp or boolean type. Project the "
+            "expression to such a column and order by that."
+        )
     pc = list(partition_cols or [])
     order_exprs = [F.col(c).asc() if isinstance(c, str) else c for c in order_cols]
-    pid: Column | None = None
-    simple = _simple_order(order_cols[0])
     n = 2 * df.sparkSession.sparkContext.defaultParallelism
-    if boundaries is not None:
-        if simple is None:
-            raise ValueError(
-                "explicit boundaries need a bare first order column "
-                "(ASC or DESC, default null ordering)"
-            )
-        pid = _pid_case_sql(f"`{simple[0]}`", boundaries, simple[1])
-    elif simple is not None:
-        first, asc = simple
-        enc = _numeric_encoding_sql(df, first)
-        if enc is not None:
-            # auto-derive deterministic cuts: one approxQuantile pass on
-            # the (column-pruned, order-preserving-encoded) first order
-            # column (memoized by plan semantic hash — boundaries only
-            # affect balance)
-            if _is_numeric(df, first):
-                cuts = _memo_boundaries(df, first)
-            else:
-                cuts = _memo_boundaries(df.select(F.expr(enc).alias("_enc")), "_enc")
-            pid = _pid_case_sql(enc, cuts, asc)
-        elif dict(df.dtypes).get(first, "") == "string":
-            # strings have no approxQuantile: bounded deterministic
-            # sample → driver-sorted literal cuts (same monotone-pid
-            # construction, Column-API literals so no SQL escaping);
-            # memoized like the numeric boundaries so repeated
-            # constructions skip the sampling action
-            cuts = _memo_cuts(
-                df, first, lambda: _sampled_literal_cuts(df, first, 2 * n - 1), kind="str"
-            )
-            pid = _pid_case_lit(first, cuts, asc)
-    if pid is not None:
-        # deterministic assignment + ONE EXPLICIT hash exchange on
-        # (_pid, groups): the local window's clustering requirement is
-        # satisfied by this repartition (no further exchange), and the
-        # offsets aggregate below consumes the SAME node — exchange
-        # reuse then scans and shuffles the input exactly once, and the
-        # offsets branch is a sort-free hash aggregate over the reused
-        # shuffle output (r6: replaces both the r5 double scan and the
-        # interim double sort). The count `n` (see the docstring) is
-        # pinned: a bare repartition(col) is REPARTITION_BY_COL, which
-        # AQE's byte-based coalescing may shrink onto a few tasks (r15
-        # sf0.1: q_decile_stats' 600k-row local window ran on 3 tasks).
-        ranged = df.withColumn("_pid", pid).repartition(n, F.col("_pid"), *pc)
-    else:
-        # residual fallback (complex first order expression or custom
-        # NULLS placement): sampled range exchange. The local-window and
-        # offsets subplans share this exchange node, so with exchange
-        # reuse (Spark's default) it executes once and both sides see
-        # one consistent pid assignment. Without reuse, two executions
-        # of RangePartitioner could sample different boundaries and
-        # silently disagree — refuse rather than corrupt.
-        reuse = df.sparkSession.conf.get("spark.sql.exchange.reuse", "true")
-        if str(reuse).lower() != "true":
-            raise ValueError(
-                "stitched_running's sampled-range fallback requires "
-                "spark.sql.exchange.reuse=true (the local-window and "
-                "offsets subplans must share one range exchange). "
-                "Project the first order expression to a plain column "
-                "to use the deterministic-boundary mode instead."
-            )
-        # every df column is appended as a trailing tie-refining range
-        # key: column pruning then cannot narrow either subplan's
-        # exchange child, so the local-window and offsets branches
-        # canonicalize to ONE range exchange and reuse executes the
-        # boundary sampling exactly once — the two sides can never see
-        # different sampled boundaries. (Trailing keys only refine tie
-        # placement at partition cuts; rank among order-key ties is
-        # arbitrary either way, and the offsets absorb any split.)
-        # UNORDERABLE payload columns (maps) can't be range keys, and
-        # leaving them out would reopen the pruning-divergence hazard —
-        # refuse with guidance instead of corrupting silently.
-        unorderable = [c for c, t in df.dtypes if "map<" in t]
-        if unorderable:
-            raise ValueError(
-                "stitched_running's sampled-range fallback cannot carry "
-                f"unorderable (map-typed) payload columns {unorderable}: "
-                "they can't join the shared range-exchange keys. Project "
-                "the first order expression to a plain column to use the "
-                "deterministic-boundary mode instead."
-            )
-        range_exprs = (
-            [F.col(c).asc() for c in pc]
-            + order_exprs
-            + [F.col(c).asc() for c in df.columns]
-        )
-        ranged = df.repartitionByRange(n, *range_exprs).withColumn(
-            "_pid", F.spark_partition_id()
-        )
+    if boundaries is None:
+        boundaries = _memo_boundaries(df, enc)
+    # deterministic assignment + ONE EXPLICIT hash exchange on
+    # (_pid, groups): the local window's clustering requirement is
+    # satisfied by this repartition (no further exchange), and the
+    # offsets aggregate below consumes the SAME node — exchange
+    # reuse then scans and shuffles the input exactly once, and the
+    # offsets branch is a sort-free hash aggregate over the reused
+    # shuffle output. The count `n` (see the docstring) is pinned: a
+    # bare repartition(col) is REPARTITION_BY_COL, which AQE's
+    # byte-based coalescing may shrink onto a few tasks (sf0.1:
+    # q_decile_stats' 600k-row local window ran on 3 tasks).
+    pid = _pid_case_sql(enc, boundaries, simple[1])
+    ranged = df.withColumn("_pid", pid).repartition(n, F.col("_pid"), *pc)
     local_w = (
         Window.partitionBy("_pid", *pc)
         .orderBy(*order_exprs)
@@ -499,8 +349,6 @@ def stitched_running(
     local = ranged
     for out, src in running.items():
         local = local.withColumn(f"_loc_{out}", F.sum(src).over(local_w))
-    for out, src in running_min.items():
-        local = local.withColumn(f"_locm_{out}", F.min(src).over(local_w))
     if running_min_excl:
         local_w_excl = (
             Window.partitionBy("_pid", *pc)
@@ -523,10 +371,7 @@ def stitched_running(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     aggs = [F.sum(src).alias(f"_t_{out}") for out, src in running.items()]
-    aggs += [
-        F.min(src).alias(f"_tm_{out}")
-        for out, src in {**running_min, **running_min_excl}.items()
-    ]
+    aggs += [F.min(src).alias(f"_tm_{out}") for out, src in running_min_excl.items()]
     # The offsets aggregate consumes `ranged` — the SAME explicit
     # exchange the local window reads — so exchange reuse executes the
     # scan + shuffle once and this branch is a sort-free hash
@@ -550,7 +395,7 @@ def stitched_running(
     sel = [F.col(c) for c in ["_pid", *pc]]
     for out in running:
         sel.append((F.sum(f"_t_{out}").over(off_w) - F.col(f"_t_{out}")).alias(f"_off_{out}"))
-    for out in {**running_min, **running_min_excl}:
+    for out in running_min_excl:
         # min over EARLIER partitions only (exclusive frame; NULL for the
         # first partition — least() skips it)
         sel.append(F.min(f"_tm_{out}").over(off_w_excl).alias(f"_offm_{out}"))
@@ -574,7 +419,7 @@ def stitched_running(
         joined = joined.withColumn(
             out, (F.col(f"_loc_{out}") + F.col(f"_off_{out}")).cast("bigint")
         )
-    for out in {**running_min, **running_min_excl}:
+    for out in running_min_excl:
         # least() skips NULLs, so the result is NULL only when BOTH the
         # local (exclusive) min and the earlier-partition min are absent
         # — i.e. the global first row of an exclusive frame, as intended
@@ -587,11 +432,7 @@ def stitched_running(
         )
     drop = ["_pid", "_off_n", "_loc_rn"]
     drop += [c for out in running for c in (f"_loc_{out}", f"_off_{out}")]
-    drop += [
-        c
-        for out in {**running_min, **running_min_excl}
-        for c in (f"_locm_{out}", f"_offm_{out}")
-    ]
+    drop += [c for out in running_min_excl for c in (f"_locm_{out}", f"_offm_{out}")]
     return joined.drop(*drop)
 
 
@@ -614,7 +455,7 @@ def ntile_from_rank(k: int, rank_col: str, n_col: str) -> Column:
 
 def range_boundaries(df: DataFrame, *cols: str) -> list[list]:
     """Approximate equi-depth cut lists for ``stitched_running``'s
-    deterministic-assignment mode, one per column of ``cols``, from ONE
+    ``boundaries``, one per column of ``cols``, from ONE
     ``approxQuantile`` pass on the driver (relative error 1%). The cuts
     are the ``4n``-quantiles of the stitch's sizing rule, ``n = 2 ×
     defaultParallelism``. Chained stitches take their cuts from one

@@ -28,6 +28,7 @@ import os
 import re
 import time
 from collections.abc import Callable, Iterable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
@@ -143,12 +144,10 @@ class ObjectStoreTarget(Target):
     def _hadoop(self):
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(
-                "ObjectStoreTarget needs an active SparkSession (its Hadoop "
-                "configuration supplies filesystem credentials/endpoints)"
-            )
+        # the thread's active session, else the process default: jobs
+        # run on the scheduler's pool threads, which have no active
+        # session of their own (raises when there is no session at all)
+        spark = SparkSession.active()
         jvm = spark._jvm
         conf = spark._jsc.hadoopConfiguration()
         uri = jvm.java.net.URI.create(self.unique_id)
@@ -992,19 +991,15 @@ class ExecutionManager:
     ) -> dict[str, str]:
         """Build [start, end). Returns unique_id →
         'ran'|'skipped'|'failed'|'backoff' ('backoff' only with a
-        journal + failure_backoff configured)."""
+        journal + failure_backoff configured), accumulated over every
+        call on this manager. Up to ``max_workers`` jobs run at once,
+        each as soon as all its upstream jobs have finished."""
         bg = self.manager.expand(start, end)
         last = self._last_outcomes() if self.failure_backoff is not None else {}
-        if max_workers <= 1:
-            for cj in bg.topological():
-                self.results[cj.unique_id] = self._run_one(cj, now, force, last)
-            return self.results
-
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-
         g = bg.graph
         indeg = {n: g.in_degree(n) for n in g.nodes}
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        finished = 0
+        with ThreadPoolExecutor(max_workers=max(1, max_workers)) as pool:
             futures: dict = {}
 
             def submit(n: str) -> None:
@@ -1018,14 +1013,14 @@ class ExecutionManager:
                 for f in done:
                     n = futures.pop(f)
                     self.results[n] = f.result()
+                    finished += 1
                     for succ in g.successors(n):
                         indeg[succ] -= 1
                         if indeg[succ] == 0:
                             submit(succ)
-        if len(self.results) != g.number_of_nodes():
+        if finished != g.number_of_nodes():
             # nodes whose in-degree never reached 0 — the expanded graph
-            # has a cycle; match the serial path, which raises via
-            # nx.topological_sort instead of returning partial results
-            unreachable = sorted(n for n in g.nodes if n not in self.results)
+            # has a cycle; raise instead of returning partial results
+            unreachable = sorted(n for n in g.nodes if indeg[n] > 0)
             raise ValueError(f"dependency cycle: {len(unreachable)} unreachable nodes, e.g. {unreachable[:3]}")
         return self.results

@@ -2210,7 +2210,7 @@ def q_band_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [StructField(f"s{i}", LongType()) for i in range(_K)]
     )
     sig = (
-        spread(d.filter(F.size(toks) >= 3))
+        spread(d.filter(F.size(toks) >= 3), "doc_id")
         .select("doc_id", "text")
         .mapInArrow(charfold_sig_gen(3, _A, _B, _P, "doc_id"), _sig_schema)
     )

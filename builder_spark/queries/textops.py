@@ -158,7 +158,7 @@ def q_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(F.col("text"), " ")
     # spread BEFORE the fold: the fixture is a single-row-group parquet
     # file (1 scan task), and the char fold is the expensive stage — a
-    # round-robin repartition first runs it on every core. At cluster
+    # hash repartition on doc_id first runs it on every core. At cluster
     # scale the scan is already multi-split and spread no-ops.
     _sig_schema = StructType(
         [StructField("doc_id", LongType())]
@@ -168,7 +168,7 @@ def q_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rejoins): a repartition boundary re-ran the kernel 4 times;
     # materialized, one kernel run, 8 longs per doc.
     sig = materialize(
-        spread(d.filter(F.size(toks) >= 3))
+        spread(d.filter(F.size(toks) >= 3), "doc_id")
         .select("doc_id", "text")
         .mapInArrow(charfold_sig_gen(3, _A, _B, _P, "doc_id"), _sig_schema)
     )

@@ -310,25 +310,26 @@ def q_global_cumsum_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     window — the distributed form of the scale boundary SCALE.md flags
     for every empty-PARTITION-BY window:
 
-    1. ``repartitionByRange`` on the total order (o_orderdate,
-       o_orderkey) — rows land in sorted, non-overlapping ranges.
-    2. A LOCAL window per range partition (partition key =
-       ``spark_partition_id()``) computes within-partition cumsum/rank
-       — each of the 32 partitions works independently.
-    3. Per-partition totals (32 rows) cumsum into prefix OFFSETS —
-       the only single-partition window, over data whose size equals
-       the partition COUNT, not the row count — and broadcast back.
+    1. Each row gets a partition id monotone in the total order
+       (o_orderdate, o_orderkey): the count of approxQuantile cuts its
+       order key passes, hashed into 2 × defaultParallelism shuffle
+       partitions.
+    2. A LOCAL window per partition id computes within-partition
+       cumsum/rank — every partition works independently.
+    3. Per-partition totals (one row per id) cumsum into prefix
+       OFFSETS — the only single-partition window, over data whose
+       size equals the partition COUNT, not the row count — and are
+       broadcast back.
     4. global = local + offset of all earlier partitions.
 
-    The result is independent of where the range boundaries fall
-    (offsets absorb any split), values are exact integers, and no
-    stage ever holds more than one range partition — the same plan
-    ranks 100 TB. Built on :func:`stitched_running` (the shared
-    implementation of exactly this recipe); the order key leads with
-    the timestamp cast to epoch seconds so the deterministic
-    auto-boundary mode applies — nothing is persisted, nothing is
-    resampled (same total order: the cast is monotone and ties still
-    break on o_orderkey). The oracle states the naive global window,
+    The result is independent of where the boundaries fall (offsets
+    absorb any split), values are exact integers, and no stage ever
+    holds more than one partition — the same plan ranks 100 TB. Built
+    on :func:`stitched_running` (the shared implementation of exactly
+    this recipe); the order key leads with the timestamp cast to epoch
+    micros, a bare numeric column as the stitch requires (same total
+    order: the cast is monotone and ties still break on o_orderkey).
+    Nothing is persisted. The oracle states the naive global window,
     which IS single-partition; equivalence proves the stitching is
     invisible."""
     from builder_spark.operators.partitioning import stitched_running
@@ -340,7 +341,7 @@ def q_global_cumsum_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "o_orderdate",
             # epoch micros: monotone in the timestamp (session tz is UTC),
-            # numeric so the deterministic auto-boundary mode applies
+            # a bare numeric order column, as the stitch requires
             F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("_ts"),
             spend.alias("_v"),
         ),

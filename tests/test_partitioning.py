@@ -23,7 +23,7 @@ def _skewed(spark):
 def test_spread_raises_partition_count(spark):
     df = spark.range(100).coalesce(1)
     assert df.rdd.getNumPartitions() == 1
-    out = spread(df)
+    out = spread(df, "id")
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert out.count() == 100
 
@@ -31,11 +31,11 @@ def test_spread_raises_partition_count(spark):
 def test_spread_noop_when_well_partitioned(spark):
     target = spark.sparkContext.defaultParallelism
     df = spark.range(1000).repartition(target + 4)
-    assert spread(df) is df
+    assert spread(df, "id") is df
 
 
 def test_with_salt_splits_hot_key(spark):
-    df = with_salt(spread(_skewed(spark)), 8)
+    df = with_salt(spread(_skewed(spark), "v"), 8)
     per_salt = df.filter(F.col("k") == "hot").groupBy("_salt").count().collect()
     assert len(per_salt) == 8  # hot key spread over all salt buckets
 
@@ -81,13 +81,12 @@ from builder_spark.operators.partitioning import _simple_order, stitched_running
 def test_simple_order_rendering_pinned(spark):
     """_simple_order parses Column._jc.toString() — a private rendering
     that can change across Spark versions. Pin the expected forms so an
-    upgrade SURFACES a silent demotion of every stitched query to the
-    sampled fallback instead of letting it happen quietly."""
+    upgrade fails here rather than in every stitched query."""
     assert _simple_order("x") == ("x", True)
     assert _simple_order(F.col("x")) == ("x", True)
     assert _simple_order(F.col("x").asc()) == ("x", True)
     assert _simple_order(F.col("x").desc()) == ("x", False)
-    # complex / custom-NULLS shapes must NOT parse (they need the fallback)
+    # complex / custom-NULLS shapes must NOT parse (the stitch rejects them)
     assert _simple_order(F.col("x") + 1) is None
     assert _simple_order(F.col("x").desc_nulls_first()) is None
     assert _simple_order(F.col("x").asc_nulls_last()) is None
@@ -105,24 +104,6 @@ def _naive(df, order_exprs, running_src, rank=True):
 def _same(a, b, cols):
     sa, sb = a.select(*cols), b.select(*cols)
     assert sa.exceptAll(sb).count() == 0 and sb.exceptAll(sa).count() == 0
-
-
-def test_stitched_string_order_is_deterministic_and_exact(spark):
-    """Bare STRING first order column: deterministic literal-cut mode
-    (no sampled range exchange in the plan), exact vs the naive
-    window — ASC and DESC."""
-    rows = [(f"s{(i * 17) % 37:03d}", i) for i in range(500)]
-    df = spark.createDataFrame(rows, "k string, v int").repartition(4)
-    got = stitched_running(df, ["k", "v"], running={"rv": "v"}, rank_name="rn")
-    assert "rangepartitioning" not in got._jdf.queryExecution().executedPlan().toString()
-    _same(got, _naive(df, [F.col("k").asc(), F.col("v").asc()], "v"),
-          ["k", "v", "rv", "rn"])
-
-    got_d = stitched_running(df, [F.col("k").desc(), F.col("v").asc()], rank_name="rn")
-    want_d = df.withColumn(
-        "rn", F.row_number().over(Window.orderBy(F.col("k").desc(), F.col("v").asc())).cast("bigint")
-    )
-    _same(got_d, want_d, ["k", "v", "rn"])
 
 
 def test_stitched_date_and_timestamp_order_deterministic(spark):
@@ -145,30 +126,33 @@ def test_stitched_date_and_timestamp_order_deterministic(spark):
 
 
 def test_stitched_fallback_needs_exchange_reuse(spark):
-    """Complex first-order expressions take the sampled-range fallback,
-    whose correctness rests on both subplans sharing ONE range
-    exchange. With spark.sql.exchange.reuse=false that guarantee is
-    gone — the stitch must refuse instead of risking two executions
-    sampling different boundaries. Deterministic modes (numeric,
-    string, date) have literal pid expressions and must keep working
-    with reuse disabled."""
+    """The partition id is a literal-cut expression, so the stitch
+    does not rest on the local-window and offsets subplans sharing one
+    exchange: it stays exact with spark.sql.exchange.reuse=false."""
     rows = [(i, (i * 13) % 40, f"p{i % 5}") for i in range(300)]
     df = spark.createDataFrame(rows, "id int, v int, payload string").repartition(4)
-    order = [(F.col("v") * 2 + 1).asc(), F.col("id").asc()]
-
-    # fallback is exact while reuse is on (the default)
-    got = stitched_running(df, order, running={"rv": "v"}, rank_name="rn")
-    _same(got, _naive(df, order, "v"), ["id", "v", "payload", "rv", "rn"])
-
     spark.conf.set("spark.sql.exchange.reuse", "false")
     try:
-        with pytest.raises(ValueError, match="exchange.reuse"):
-            stitched_running(df, order, rank_name="rn")
-        det = stitched_running(df, ["v", "id"], rank_name="rn")
-        want = df.withColumn("rn", F.row_number().over(Window.orderBy("v", "id")).cast("bigint"))
-        _same(det, want, ["id", "v", "rn"])
+        det = stitched_running(df, ["v", "id"], running={"rv": "v"}, rank_name="rn")
+        _same(det, _naive(df, ["v", "id"], "v"), ["id", "v", "payload", "rv", "rn"])
     finally:
         spark.conf.set("spark.sql.exchange.reuse", "true")
+
+
+def test_stitched_rejects_unencodable_first_order(spark):
+    """The first order item must be a bare numeric/date/timestamp/
+    boolean column with default null ordering; a complex expression,
+    custom NULLS placement or a string column each raise one
+    ValueError that says to project it to such a column."""
+    df = spark.createDataFrame([(1, 2, "a")], "id int, v int, s string")
+    for first in [
+        F.col("v") * 2 + 1,
+        F.col("v").asc_nulls_last(),
+        F.col("v").desc_nulls_first(),
+        "s",
+    ]:
+        with pytest.raises(ValueError, match="Project the expression"):
+            stitched_running(df, [first, "id"], rank_name="rn")
 
 
 def test_stitched_covered_projection_reuses_exchange(spark):
@@ -223,49 +207,36 @@ def test_stitched_exchange_is_pinned_at_twice_parallelism(spark, sf_dir, grouped
     assert pinned.search(live[0]).group(1) == pinned.search(reused[0]).group(1)
 
 
-def test_stitched_fallback_rejects_map_payload(spark):
-    """Map-typed payload columns can't be range keys, and silently
-    dropping them from the shared-exchange keys would reopen the
-    pruning-divergence hazard — the fallback must refuse with
-    guidance (r6 review finding)."""
-    df = spark.createDataFrame(
-        [(1, 2, {"a": 1})], "id int, v int, m map<string,int>"
-    )
-    with pytest.raises(ValueError, match="map-typed"):
-        stitched_running(df, [(F.col("v") * 2).asc(), F.col("id").asc()], rank_name="rn")
-
-
 # ---- stitched_running edges vs the naive window --------------------------
 
 
 def _edge_rows(case: str, first: str) -> list[tuple]:
     """(id, k, g, v) rows for one edge case; ``k`` is the first order
-    column (bigint or string), ``id`` breaks its ties."""
+    column (bigint or timestamp), ``id`` breaks its ties."""
     n = {"empty": 0, "one_row": 1, "all_tied": 200, "few_distinct": 200}[case]
     rows = []
     for i in range(n):
         kv = 7 if case == "all_tied" else (i * 5) % 3
-        k = kv if first == "bigint" else f"k{kv}"
+        k = kv if first == "bigint" else datetime.datetime(2020, 1, 1, kv)
         rows.append((i, k, f"g{i % 3}", (i * 37) % 11 - 5))
     return rows
 
 
 @pytest.mark.parametrize("grouped", [False, True], ids=["ungrouped", "grouped"])
-@pytest.mark.parametrize("first", ["bigint", "string"])
+@pytest.mark.parametrize("first", ["bigint", "timestamp"])
 @pytest.mark.parametrize("case", ["empty", "one_row", "all_tied", "few_distinct"])
 def test_stitched_edges_match_naive_window(spark, case, first, grouped):
     """Empty input, one row, every first-order value tied, and fewer
     distinct first-order values than boundary cuts: every output of the
-    stitch (running sum, running min, exclusive running min, rank and
-    the per-group totals) equals the plain window over the same order,
-    ungrouped and grouped."""
+    stitch (running sum, exclusive running min, rank and the per-group
+    totals) equals the plain window over the same order, ungrouped and
+    grouped."""
     rows = _edge_rows(case, first)
     df = spark.createDataFrame(rows, f"id bigint, k {first}, g string, v bigint").repartition(3)
     pc = ["g"] if grouped else []
     got = stitched_running(
-        df, ["k", "id"], running={"rs": "v"}, running_min={"rm": "v"},
-        running_min_excl={"rme": "v"}, rank_name="rn", partition_cols=pc,
-        with_totals=True,
+        df, ["k", "id"], running={"rs": "v"}, running_min_excl={"rme": "v"},
+        rank_name="rn", partition_cols=pc, with_totals=True,
     )
     w = Window.partitionBy(*pc).orderBy("k", "id")
     upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -274,12 +245,11 @@ def test_stitched_edges_match_naive_window(spark, case, first, grouped):
     want = df.select(
         "*",
         F.sum("v").over(upto).cast("bigint").alias("rs"),
-        F.min("v").over(upto).alias("rm"),
         F.min("v").over(before).alias("rme"),
         F.row_number().over(w).cast("bigint").alias("rn"),
         F.sum("v").over(whole).cast("bigint").alias("rs_total"),
         F.count(F.lit(1)).over(whole).cast("bigint").alias("rn_total"),
     )
-    cols = ["id", "k", "g", "v", "rs", "rm", "rme", "rn", "rs_total", "rn_total"]
+    cols = ["id", "k", "g", "v", "rs", "rme", "rn", "rs_total", "rn_total"]
     assert got.count() == len(rows)
     _same(got, want, cols)

@@ -420,6 +420,28 @@ def test_parallel_execution_raises_on_cycle(tmp_path):
         em.start_execution(D0, D0 + timedelta(days=1), max_workers=4)
 
 
+@pytest.mark.parametrize("workers", [1, 2])
+def test_reused_manager_is_not_a_false_cycle(tmp_path, workers):
+    """One ExecutionManager driving a second day: ``results``
+    accumulates across calls, so the cycle check must count only the
+    nodes this call finished."""
+    bm = BuildManager()
+    bm.add(Job(name="a", run=lambda ctx: None, targets=f"{tmp_path}/a/d=%Y-%m-%d"))
+    bm.add(
+        Job(
+            name="b",
+            run=lambda ctx: None,
+            targets=f"{tmp_path}/b/d=%Y-%m-%d",
+            depends=[f"{tmp_path}/a/d=%Y-%m-%d"],
+        )
+    )
+    em = ExecutionManager(bm, FileExecutor())
+    day = timedelta(days=1)
+    em.start_execution(D0, D0 + day, max_workers=workers)
+    r = em.start_execution(D0 + day, D0 + 2 * day, max_workers=workers)
+    assert len(r) == 4 and set(r.values()) == {"ran"}
+
+
 def test_prefix_named_dependency_is_not_a_false_cycle(tmp_path):
     """A dependency whose pattern merely CONTAINS a job's targets
     pattern (``…_extra`` vs ``…_extra_in``, ``%Y%m%d`` vs

@@ -206,7 +206,7 @@ def test_per_row_ops_are_shuffle_free(spark, name):
         ("q_interpolate", 3),      # daily agg + spine join + user windows
         ("q_yoy_growth", 2),
         # stitched rewrites: extra exchange NODES are offsets/totals
-        # (32-row or 1-row frames) — only the rangepartitioning exchange
+        # (32-row or 1-row frames) — only the _pid hash exchange
         # carries volume (SCALE.md: count shuffles in bytes, not nodes)
         ("q_weighted_median", 6),
         ("q_sequence_islands", 5),
@@ -379,14 +379,14 @@ def test_salted_join_is_sort_merge_on_salted_key(spark):
 
 def test_global_cumsum_is_range_partitioned(spark):
     """The distributed global cumsum must carry the stitched
-    distribution (deterministic pid hash or range exchange) and
+    distribution (deterministic pid hash exchange) and
     broadcast the offsets table — never a single-partition window
     over the data."""
     from builder_spark.plans.inspect import formatted_plan
 
     df = REGISTRY["q_global_cumsum_distributed"].fn(spark, SF_DIR)
     plan = formatted_plan(df)
-    assert "hashpartitioning(_pid" in plan or "rangepartitioning" in plan
+    assert "hashpartitioning(_pid" in plan
     assert "BroadcastHashJoin" in plan
 
 
@@ -395,15 +395,15 @@ def test_global_cumsum_is_range_partitioned(spark):
 )
 def test_fact_grain_windows_are_range_partitioned(spark, name):
     """The three formerly single-partition global windows now use
-    range-partition stitching: the fact is range-partitioned and the
+    stitching: the fact is hash-partitioned on its monotone pid and the
     partition-count-sized offsets table is broadcast back. The only
     remaining single-partition frames are over ~32-row aggregates."""
     from builder_spark.plans.inspect import formatted_plan
 
     df = REGISTRY[name].fn(spark, SF_DIR)
     plan = formatted_plan(df)
-    assert "hashpartitioning(_pid" in plan or "rangepartitioning" in plan, (
-        f"{name}: no stitched distribution (pid hash / range exchange) in plan"
+    assert "hashpartitioning(_pid" in plan, (
+        f"{name}: no stitched distribution (pid hash exchange) in plan"
     )
     assert "BroadcastHashJoin" in plan, f"{name}: offsets not broadcast"
 
@@ -411,7 +411,7 @@ def test_fact_grain_windows_are_range_partitioned(spark, name):
 def test_stitched_running_matches_naive_window(spark):
     """Property: stitched_running == the naive single-partition window
     on the same data, for running sums and rank, regardless of where
-    the sampled range boundaries fall."""
+    the boundaries fall."""
     from pyspark.sql import Window
 
     from builder_spark.operators.partitioning import stitched_running
@@ -446,13 +446,13 @@ def test_stitched_running_matches_naive_window(spark):
 )
 def test_customer_grain_windows_are_range_partitioned(spark, name):
     """Customer-grain (and 3-value-key) windows also go through the
-    stitching pattern: range partitioning + broadcast offsets."""
+    stitching pattern: pid hash partitioning + broadcast offsets."""
     from builder_spark.plans.inspect import formatted_plan
 
     df = REGISTRY[name].fn(spark, SF_DIR)
     plan = formatted_plan(df)
-    assert "hashpartitioning(_pid" in plan or "rangepartitioning" in plan, (
-        f"{name}: no stitched distribution (pid hash / range exchange) in plan"
+    assert "hashpartitioning(_pid" in plan, (
+        f"{name}: no stitched distribution (pid hash exchange) in plan"
     )
     assert "BroadcastHashJoin" in plan, f"{name}: offsets not broadcast"
 
@@ -518,14 +518,14 @@ def test_ntile_from_rank_matches_builtin_ntile(spark):
 )
 def test_order_stats_are_range_partitioned(spark, name):
     """The fact-grain order-statistic queries are built on the stitched
-    rank: range partitioning on the order + broadcast offsets, never a
+    rank: pid hash partitioning on the order + broadcast offsets, never a
     single-partition sort of the fact."""
     from builder_spark.plans.inspect import formatted_plan
 
     df = REGISTRY[name].fn(spark, SF_DIR)
     plan = formatted_plan(df)
-    assert "hashpartitioning(_pid" in plan or "rangepartitioning" in plan, (
-        f"{name}: no stitched distribution (pid hash / range exchange)"
+    assert "hashpartitioning(_pid" in plan, (
+        f"{name}: no stitched distribution (pid hash exchange)"
     )
     assert "BroadcastHashJoin" in plan, f"{name}: offsets/grid not broadcast"
 
@@ -560,10 +560,9 @@ def test_reservoir_sample_is_take_ordered(spark):
 
 
 def test_stitched_running_explicit_boundaries_matches_naive(spark):
-    """The deterministic-boundary mode (no persist, no sampled range
-    exchange) == the naive global window, for running sums and rank —
-    including deliberately BAD boundaries, which may only unbalance
-    partitions, never change the result."""
+    """Explicit boundaries (no persist) == the naive global window,
+    for running sums and rank — including deliberately BAD boundaries,
+    which may only unbalance partitions, never change the result."""
     from pyspark.sql import Window
 
     from builder_spark.operators.partitioning import (
@@ -611,8 +610,8 @@ def test_pair_graph_joins_are_equi_joins(spark, name):
 
 
 def test_stitched_running_min_matches_naive(spark):
-    """Inclusive and exclusive stitched running mins == the naive
-    global windows."""
+    """The exclusive stitched running min == the naive global
+    window."""
     from pyspark.sql import Window
 
     from builder_spark.operators.partitioning import stitched_running
@@ -623,16 +622,10 @@ def test_stitched_running_min_matches_naive(spark):
     got = stitched_running(
         df,
         ["p_partkey"],
-        running_min={"m_incl": "v"},
         running_min_excl={"m_excl": "v"},
-    ).select("p_partkey", "m_incl", "m_excl")
-    w_i = Window.orderBy("p_partkey").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ).select("p_partkey", "m_excl")
     w_e = Window.orderBy("p_partkey").rowsBetween(Window.unboundedPreceding, -1)
-    want = df.select(
-        "p_partkey",
-        F.min("v").over(w_i).alias("m_incl"),
-        F.min("v").over(w_e).alias("m_excl"),
-    )
+    want = df.select("p_partkey", F.min("v").over(w_e).alias("m_excl"))
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 
@@ -729,10 +722,9 @@ def test_inverse_quantile_probe_has_no_sort(spark):
 
 
 def test_stitched_running_releases_cache(spark):
-    """r4 judge item: the sampled-mode stitch materializes the offsets
-    table eagerly and unpersists the ranged frame — NO storage may stay
-    pinned once the query is built, so a long-lived session running
-    dozens of stitched queries accumulates nothing."""
+    """NO storage may stay pinned once a stitched query is built, so a
+    long-lived session running dozens of stitched queries accumulates
+    nothing."""
     from builder_spark.operators.partitioning import stitched_running
 
     spark.catalog.clearCache()
@@ -754,10 +746,9 @@ def test_stitched_running_releases_cache(spark):
 
 
 def test_stitched_running_reexecution_is_stable(spark):
-    """The returned frame re-executes the sampled range exchange on
-    every action (the cache is gone); RangePartitioner's per-partition
-    seeded sampling over the same deterministic input must reproduce
-    the boundaries — collect twice, compare exactly."""
+    """The returned frame re-executes the stitch on every action (the
+    cache is gone); its literal-cut pid must reproduce the same
+    assignment — collect twice, compare exactly."""
     from builder_spark.operators.partitioning import stitched_running
 
     df = load_table(spark, SF_DIR, "orders").select(
@@ -770,9 +761,8 @@ def test_stitched_running_reexecution_is_stable(spark):
 
 
 def test_stitched_running_rejects_overlapping_outputs(spark):
-    """running / running_min / running_min_excl share the _locm_ local
-    column namespace — a duplicated output name must raise, not return
-    silently wrong values."""
+    """running and running_min_excl both write their output name — a
+    duplicated name must raise, not return silently wrong values."""
     from builder_spark.operators.partitioning import stitched_running
 
     df = load_table(spark, SF_DIR, "orders").select(
@@ -781,7 +771,7 @@ def test_stitched_running_rejects_overlapping_outputs(spark):
     with pytest.raises(ValueError, match="unique"):
         stitched_running(
             df, ["o_orderkey"],
-            running_min={"x": "v"}, running_min_excl={"x": "v"},
+            running={"x": "v"}, running_min_excl={"x": "v"},
         )
 
 

@@ -364,7 +364,7 @@ def test_binary_search_pid_matches_linear_count(spark, cuts, vals, asc):
     count-of-boundaries-passed definition on any value/cut set, both
     directions, including NULLs (ASC → pid 0, DESC → pid len(cuts))
     and duplicate cuts (deduped)."""
-    from builder_spark.operators.partitioning import _pid_case_lit, _pid_case_sql
+    from builder_spark.operators.partitioning import _pid_case_sql
 
     cset = sorted(set(cuts))
 
@@ -379,12 +379,10 @@ def test_binary_search_pid_matches_linear_count(spark, cuts, vals, asc):
     out = df.select(
         "i",
         _pid_case_sql("`v`", list(cuts), asc).alias("p_sql"),
-        _pid_case_lit("v", list(cuts), asc).alias("p_lit"),
     ).collect()
     for r in out:
         want = expected(vals[r["i"]])
         assert r["p_sql"] == want, (vals[r["i"]], cset, asc, r["p_sql"], want)
-        assert r["p_lit"] == want, (vals[r["i"]], cset, asc, r["p_lit"], want)
 
 
 @_settings
@@ -476,7 +474,7 @@ def test_winnow_containment_pairs_complete_vs_brute_force(spark):
 def test_grouped_stitch_matches_partitioned_window(spark, data):
     """The GROUPED stitch (partition_cols= — the form behind every
     per-group headline query) must agree with the naive PARTITION BY
-    window on ANY data: per-group running sum, rank, running min, and
+    window on ANY data: per-group running sum, rank, exclusive running min, and
     the with_totals per-group totals."""
     from builder_spark.operators.partitioning import stitched_running
 
@@ -488,7 +486,6 @@ def test_grouped_stitch_matches_partitioned_window(spark, data):
         base,
         ["id"],
         running={"rs": "vi"},
-        running_min={"rm": "vi"},
         running_min_excl={"rme": "vi"},
         rank_name="rn",
         partition_cols=["k"],
@@ -509,12 +506,11 @@ def test_grouped_stitch_matches_partitioned_window(spark, data):
         "id",
         F.sum("vi").over(w).cast("bigint").alias("rs"),
         F.count(F.lit(1)).over(w).cast("bigint").alias("rn"),
-        F.min("vi").over(w).cast("bigint").alias("rm"),
         F.min("vi").over(we).cast("bigint").alias("rme"),
         F.sum("vi").over(wt).cast("bigint").alias("rs_total"),
         F.count(F.lit(1)).over(wt).cast("bigint").alias("rn_total"),
     )
-    cols = ["id", "rs", "rn", "rm", "rme", "rs_total", "rn_total"]
+    cols = ["id", "rs", "rn", "rme", "rs_total", "rn_total"]
     want = sorted(tuple(r[c] for c in cols) for r in naive.collect())
     have = sorted(tuple(r[c] for c in cols) for r in got.select(*cols).collect())
     assert have == want
