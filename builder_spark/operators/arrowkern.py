@@ -1,17 +1,23 @@
-"""Vectorized Arrow/numpy kernels for the charfold hash family.
+"""Vectorized Arrow/numpy kernels for the near-duplicate hash family.
 
 The charfold polynomial (``acc = (acc*31 + codepoint) mod 2^25`` per
-character, shingles composed via the fold's concatenation linearity) is
-pure integer arithmetic — but as Spark higher-order-function lambdas it
-is INTERPRETED, one expression-tree walk per character/shingle, and the
-text battery burns tens of CPU-seconds per query on it at sf0.1. These
-kernels keep Spark in charge of distribution and shuffles and hand each
-Arrow batch to numpy (guide §4.2): the per-token fold runs as
-width-bucketed matrix passes over UTF-32 code points, shingle
-composition as ``k-1`` strided vector passes, and MinHash permutations
-as one ``np.minimum.reduceat`` per permutation. Values are
-BIT-IDENTICAL to the expression forms in ``operators/dedup.py``
-(same int64 arithmetic, intermediates < 2^55; verified by the graded
+character, shingles composed via the fold's concatenation linearity)
+and the MinHash permutations are pure integer arithmetic — but as
+Spark higher-order-function lambdas they are INTERPRETED, one
+expression-tree walk per character/shingle. These kernels keep Spark in
+charge of distribution and shuffles and hand each Arrow batch to numpy
+(guide §4.2). Every kernel is built from four helpers:
+
+- :func:`_code_points` decodes an Arrow string column's UTF-8 buffer to
+  code points in one vectorized pass — no Python string objects;
+- :func:`_fold` is the charfold of many code-point segments at once;
+- :func:`_windows` combines every run of ``w`` consecutive values
+  inside one document (word shingles, char grams, winnow windows);
+- :func:`_minima` takes one ``np.minimum.reduceat`` per permutation.
+
+Values are BIT-IDENTICAL to the expression forms in
+``operators/dedup.py`` (same int64 arithmetic, intermediates < 2^62;
+pinned by tests/test_chargram_kernel.py and verified by the graded
 DuckDB oracles, which keep hashing the concatenated strings).
 
 Only the columns a kernel needs cross the Python boundary (callers
@@ -21,174 +27,205 @@ reused Python workers share nothing per-row.
 
 from __future__ import annotations
 
-from builder_spark.operators.dedup import CHARFOLD_MOD
+import numpy as np
+import pyarrow as pa
 
-#: width-bucket fence posts for the UTF-32 code-point matrix: tokens
-#: are grouped by length so the padded matrix for a bucket is at most
-#: (bucket width) wide — one enormous token cannot blow up the memory
-#: of every other token's row.
-_WIDTH_BUCKETS = (8, 16, 32, 64, 128, 256, 1024, 4096, 1 << 30)
+from builder_spark.operators.dedup import _P, CHARFOLD_MOD
+
+_SPACE = 32
 
 
-def _fold_flat_tokens(flat, np):
-    """Per-token charfold: returns (h, p) int64 arrays where
-    ``h[i] = charfold_hash(flat[i])`` and ``p[i] = 31^len(flat[i]) mod
-    CHARFOLD_MOD`` — the (h, p) pair of operators/dedup.py's
-    ``charfold_token_hp``, empty-token guard included (len 0 → (0, 1))."""
-    n = len(flat)
-    lens = np.fromiter((len(t) for t in flat), np.int64, n)
-    maxw = int(lens.max()) if n else 0
+def _code_points(strings):
+    """Decode an Arrow string array: (cp, starts, lens, valid) where
+    ``cp`` is every string's code points end to end (int64), string i
+    is ``cp[starts[i] : starts[i] + lens[i]]`` and ``valid`` is False
+    for nulls, which decode as empty strings. Offsets are read at the
+    array's own width (string or large_string) and from its slice
+    offset."""
+    valid = strings.is_valid().to_numpy(zero_copy_only=False)
+    if strings.null_count:
+        strings = strings.fill_null("")  # null slots own no bytes
+    n = len(strings)
+    _, obuf, dbuf = strings.buffers()
+    width = np.int64 if pa.types.is_large_string(strings.type) else np.int32
+    offs = np.frombuffer(obuf, width)[strings.offset : strings.offset + n + 1].astype(np.int64)
+    b = np.frombuffer(dbuf, np.uint8)[offs[0] : offs[-1]] if dbuf else np.empty(0, np.uint8)
+    offs -= offs[0]
+    lead = np.flatnonzero((b & 0xC0) != 0x80)  # first byte of each code point
+    cp = b[lead].astype(np.int64)
+    multi = np.flatnonzero(cp >= 0x80)  # lead bytes of 2- to 4-byte sequences
+    at, v = lead[multi], cp[multi]
+    nb = 2 + (v >= 0xE0) + (v >= 0xF0)
+    v &= np.array([0, 0, 0x1F, 0x0F, 0x07])[nb]
+    pad = np.concatenate((b, np.zeros(3, np.uint8)))
+    for j in (1, 2, 3):
+        v = np.where(nb > j, (v << 6) | (pad[at + j] & 0x3F), v)
+    cp[multi] = v
+    offs = np.searchsorted(lead, offs)  # byte offset -> code-point index
+    return cp, offs[:-1], np.diff(offs), valid
+
+
+def _fold(cp, starts, lens):
+    """charfold of every segment ``cp[starts[i] : starts[i] + lens[i]]``:
+    (h, p) with ``h = charfold_hash(segment)`` and ``p = 31^len mod
+    CHARFOLD_MOD`` — the (h, p) pair of ``dedup.charfold_token_hp``
+    (an empty segment folds to (0, 1)). The per-character fold
+    ``acc*31 + c`` unrolls to ``sum(c_j * 31^(len-1-j))``, so each
+    segment is one power-weighted ``np.add.reduceat`` (terms < 2^25,
+    sums far below 2^63)."""
+    maxw = int(lens.max()) if len(lens) else 0
     pw = np.empty(maxw + 1, np.int64)
     pw[0] = 1
     for i in range(1, maxw + 1):
-        pw[i] = (pw[i - 1] * 31) % CHARFOLD_MOD
-    h = np.zeros(n, np.int64)
-    lo = 0
-    for hi in _WIDTH_BUCKETS:
-        if lo >= maxw:
-            break
-        width = min(hi, maxw)
-        sel = np.nonzero((lens > lo) & (lens <= width))[0]
-        lo = hi
-        if sel.size == 0:
-            continue
-        sub = np.array([flat[i] for i in sel], dtype=f"U{width}")
-        cp = sub.view(np.uint32).reshape(sel.size, -1).astype(np.int64)
-        ll = lens[sel]
-        hh = np.zeros(sel.size, np.int64)
-        for j in range(cp.shape[1]):
-            hh = np.where(ll > j, (hh * 31 + cp[:, j]) % CHARFOLD_MOD, hh)
-        h[sel] = hh
+        pw[i] = pw[i - 1] * 31 % CHARFOLD_MOD
+    ends = np.cumsum(lens)
+    at = ends - lens  # each segment's start in the gathered order
+    pos = np.arange(int(ends[-1]) if len(ends) else 0)
+    src = np.repeat(starts - at, lens) + pos
+    terms = cp[src] * pw[np.repeat(ends - 1, lens) - pos] % CHARFOLD_MOD
+    # the trailing 0 keeps every reduceat index in range for empty tails
+    h = np.add.reduceat(np.append(terms, 0), at) % CHARFOLD_MOD
+    h[lens == 0] = 0
     return h, pw[lens]
 
 
-def _batch_tokens(texts):
-    """Split a batch's texts exactly like Spark's split(text, ' ')
-    (single-space regex, limit -1: leading/consecutive/trailing empties
-    kept — Python str.split(sep) has the same contract). Returns
-    (flat token list, per-doc token counts)."""
-    toks = [t.split(" ") for t in texts]
-    flat = [w for doc in toks for w in doc]
-    return flat, [len(doc) for doc in toks]
+def _windows(vals, nper, w, step, short=None):
+    """Combine every run of ``w`` consecutive values inside one
+    document. ``vals`` holds the documents' values end to end, ``nper``
+    per document. All runs are folded at once: ``acc`` starts as
+    ``vals`` and ``acc = step(acc, s)`` adds each run's j-th value,
+    ``s`` being the slice of ``vals`` shifted by j (j = 1..w-1); runs
+    that cross a document boundary are then dropped. Returns (out,
+    nwin), the runs document by document and their count per document,
+    ``max(nper - w + 1, 0)``. Given ``short``, a document with fewer
+    than ``w`` values gets one value instead: ``short(mask)`` returns
+    them for the documents in ``mask``."""
+    nwin = np.maximum(nper - (w - 1), 0)
+    acc = vals[: max(len(vals) - (w - 1), 0)]
+    tail = len(acc)
+    for j in range(1, w):
+        acc = step(acc, slice(j, tail + j))
+    wstart = np.cumsum(nwin) - nwin
+    out = acc[np.repeat(np.cumsum(nper) - nper - wstart, nwin) + np.arange(int(nwin.sum()))]
+    if short is None:
+        return out, nwin
+    mask = nper < w
+    return np.insert(out, wstart[mask], short(mask)), np.maximum(nwin, 1)
 
 
-def _tokens_hp_arrow(text_arr, np):
-    """Zero-object tokenize + fold: pyarrow.compute.split_pattern on a
-    single space (same keep-empties contract as str.split(" ")), then
-    the charfold runs directly over the flat UTF-8 byte buffer when it
-    is pure ASCII (byte == code point, so no string decode is needed —
-    the r15 profile put ~0.25 s/task of the Arrow stages in Python
-    string materialization). Returns (h, p, nper) like
-    ``_fold_flat_tokens`` + per-doc counts, or None when the batch has
-    non-ASCII bytes or nulls (caller falls back to the object path)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if text_arr.null_count:
-        return None
-    if isinstance(text_arr, pa.ChunkedArray):
-        text_arr = text_arr.combine_chunks()
-    toks = pc.split_pattern(text_arr, pattern=" ")
-    if isinstance(toks, pa.ChunkedArray):
-        toks = toks.combine_chunks()
-    values = toks.values  # flat StringArray over one data buffer
-    if toks.offset != 0 or values.offset != 0:
-        return None  # sliced layout: rare; take the object path
-    list_offs = np.frombuffer(toks.buffers()[1], np.int32)[
-        : len(toks) + 1
-    ].astype(np.int64)
-    nper = np.diff(list_offs)
-    voff = np.frombuffer(values.buffers()[1], np.int32)[
-        : len(values) + 1
-    ].astype(np.int64)
-    data = np.frombuffer(values.buffers()[2], np.uint8)
-    span = data[voff[0] : voff[-1]]
-    if span.size and int(span.max()) >= 0x80:
-        return None
-    n = len(voff) - 1
-    lens = np.diff(voff)
-    maxw = int(lens.max()) if n else 0
-    pw = np.empty(maxw + 1, np.int64)
-    pw[0] = 1
-    for i in range(1, maxw + 1):
-        pw[i] = (pw[i - 1] * 31) % CHARFOLD_MOD
-    h = np.zeros(n, np.int64)
-    lim = len(data) - 1
-    blo = 0
-    for bhi in _WIDTH_BUCKETS:
-        if blo >= maxw:
-            break
-        width = min(bhi, maxw)
-        sel = np.nonzero((lens > blo) & (lens <= width))[0]
-        blo = bhi
-        if sel.size == 0:
-            continue
-        idx = voff[sel][:, None] + np.arange(width)
-        cp = data[np.minimum(idx, lim)].astype(np.int64)
-        ll = lens[sel]
-        hh = np.zeros(sel.size, np.int64)
-        for j in range(width):
-            hh = np.where(ll > j, (hh * 31 + cp[:, j]) % CHARFOLD_MOD, hh)
-        h[sel] = hh
-    return h, pw[lens], nper
+def _minima(vals, counts, consts, mod):
+    """MinHash minima: for each (a, b) in ``consts``, the per-document
+    minimum of ``(a*v + b) mod mod`` over its ``counts`` values — one
+    ``np.minimum.reduceat`` per permutation. Min over the multiset
+    equals min over the distinct set, so no dedup pass. Every count
+    must be >= 1: ``reduceat`` over an empty segment returns the NEXT
+    document's first value, so a zero count raises instead."""
+    if len(counts) and int(np.min(counts)) < 1:
+        raise ValueError("_minima: every document needs at least one value")
+    starts = np.cumsum(counts) - counts
+    return [pa.array(np.minimum.reduceat((a * vals + b) % mod, starts)) for a, b in consts]
 
 
-def _kgram_hashes(h, p, nper, k, np):
-    """Shingle hashes for every doc's k-grams, composed from the
-    per-token (h, p) folds exactly like ``kgram_hashes_from_hp``:
-    ``hs = ((hs*31 + 32) * p[i+j] + h[i+j]) mod CHARFOLD_MOD``.
-    Returns (sh, nsh): concatenated shingle hashes and per-doc shingle
-    counts (0 for docs with fewer than k tokens)."""
-    nper = np.asarray(nper, np.int64)
-    nsh = np.maximum(nper - (k - 1), 0)
-    tail = len(h) - (k - 1)
-    if tail <= 0:
-        return np.empty(0, np.int64), nsh
-    acc = h[:tail].copy()
-    for j in range(1, k):
-        acc = ((acc * 31 + 32) * p[j : tail + j] + h[j : tail + j]) % CHARFOLD_MOD
-    offs = np.zeros(len(nper), np.int64)
-    np.cumsum(nper[:-1], out=offs[1:])
-    total = int(nsh.sum())
-    sh_starts = np.zeros(len(nsh), np.int64)
-    np.cumsum(nsh[:-1], out=sh_starts[1:])
-    idx = np.repeat(offs - sh_starts, nsh) + np.arange(total)
-    return acc[idx], nsh
+def _word_gram_hashes(strings, k):
+    """charfold hashes of every space-joined ``k``-token shingle of
+    split(text, ' ') (single-space split, empties kept; a null text has
+    no tokens), composed from per-token (h, p) folds exactly like
+    ``kgram_hashes_from_hp``: ``acc = ((acc*31 + 32)*p + h) mod m``.
+    Returns (sh, nsh), nsh = max(tokens - k + 1, 0) per text."""
+    cp, starts, lens, valid = _code_points(strings)
+    # a separator after every non-null text: each token is then the run
+    # of code points before a separator
+    sepd = np.insert(cp, (starts + lens)[valid], _SPACE)
+    sep = np.flatnonzero(sepd == _SPACE)
+    tstart = np.concatenate(([0], sep + 1))[: len(sep)]
+    h, p = _fold(sepd, tstart, sep - tstart)
+    spaces = np.concatenate(([0], np.cumsum(cp == _SPACE)))
+    ntok = np.where(valid, spaces[starts + lens] - spaces[starts] + 1, 0)
+    return _windows(h, ntok, k, lambda acc, s: ((acc * 31 + 32) * p[s] + h[s]) % CHARFOLD_MOD)
+
+
+def _char_gram_hashes(strings, k):
+    """charfold hash of every k-CHAR gram per text, replicating
+    ``charfold_gram_hashes_from_cps(char_codepoints(text), k)`` exactly:
+    a text of len >= k has the ``len-k+1`` rolling folds; a shorter one
+    ONE truncated gram, the fold of the whole text — 0 for the empty
+    text (its ``sequence(1, 0)`` codepoint artifact ``[0, 0]`` folds to
+    0). Returns (gh, nper, nulls). A null text holds one 0-sentinel
+    gram the caller surfaces as NULL: the expression form's
+    ``size(null) = -1`` floors the gram count at 1, and that gram's
+    fold is null."""
+    cp, starts, lens, valid = _code_points(strings)
+    gh, nper = _windows(
+        cp,
+        lens,
+        k,
+        lambda acc, s: (acc * 31 + cp[s]) % CHARFOLD_MOD,
+        short=lambda m: _fold(cp, starts[m], lens[m])[0],
+    )
+    return gh, nper, ~valid
+
+
+def _distinct_lists(vals, nper, nulls):
+    """Per-document sorted-distinct of a concatenated value array, as
+    the (offsets, values) of an Arrow list column: each document in the
+    ``nulls`` mask holds one NULL slot. Consumers are set-shaped
+    (joins / intersections / explodes), so the ascending order vs
+    array_distinct's first-occurrence order is value-invisible."""
+    n = len(nper)
+    doc = np.repeat(np.arange(n, dtype=np.int64), nper)
+    order = np.lexsort((vals, doc))
+    v, d = vals[order], doc[order]
+    keep = np.ones(len(v), bool)
+    keep[1:] = (v[1:] != v[:-1]) | (d[1:] != d[:-1])
+    v, d = v[keep], d[keep]
+    offsets = np.zeros(n + 1, np.int64)
+    np.cumsum(np.bincount(d, minlength=n), out=offsets[1:])
+    mask = np.zeros(len(v), bool)
+    mask[offsets[:-1][nulls]] = True
+    return offsets, pa.array(v, pa.int64(), mask=mask)
+
+
+def token_hash_sig_gen(consts, shingle_words: int, id_name: str):
+    """mapInArrow generator for :func:`dedup.minhash_signatures`:
+    (id, _th: list<int64>) batches → (id, sig_0..sig_{K-1}), where
+    _th[j] = pmod(xxhash64(token_j), _P), rows pre-filtered to
+    ≥ ``shingle_words`` tokens. Shingle hash: ``acc = (acc·31 + th·37)
+    mod _P`` over ``shingle_words`` consecutive tokens; sig_i = min over
+    shingles of (a_i·s + b_i) mod _P for (a_i, b_i) in ``consts`` —
+    bit-identical to array_min(transform(shingles, h_i))."""
+
+    def gen(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            lists = batch.column(1)
+            th = lists.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+            ntok = np.diff(lists.offsets.to_numpy()).astype(np.int64)
+            sh, nsh = _windows(th, ntok, shingle_words, lambda acc, s: (acc * 31 + th[s] * 37) % _P)
+            sigs = _minima(sh, nsh, consts, _P)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), *sigs], names=[id_name] + [f"sig_{i}" for i in range(len(sigs))]
+            )
+
+    return gen
 
 
 def charfold_sig_gen(gram: int, a_consts, b_consts, modulus: int, id_name: str):
     """mapInArrow generator: (id, text) batches → (id, s0..s{K-1})
     MinHash signatures over charfold-hashed ``gram``-word shingles,
     s_i = min over shingles of (a_i·h + b_i) mod ``modulus``. Rows are
-    pre-filtered to ≥ ``gram`` tokens (≥ 1 shingle). Min over the
-    shingle multiset equals min over the distinct set, so no dedup
-    pass is needed (or performed) — values match the array_min/
-    transform expression form bit-for-bit."""
+    pre-filtered to ≥ ``gram`` tokens (≥ 1 shingle); values match the
+    array_min/transform expression form bit-for-bit."""
     consts = list(zip(a_consts, b_consts))
 
     def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
         for batch in batches:
-            ids = batch.column(0)
-            n = len(ids)
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            hp = _tokens_hp_arrow(batch.column(1), np)
-            if hp is None:  # non-ASCII / nulls: per-object fallback
-                flat, nper = _batch_tokens(batch.column(1).to_pylist())
-                h, p = _fold_flat_tokens(flat, np)
-            else:
-                h, p, nper = hp
-            sh, nsh = _kgram_hashes(h, p, nper, gram, np)
-            sh_starts = np.zeros(n, np.int64)
-            np.cumsum(nsh[:-1], out=sh_starts[1:])
-            cols = {id_name: ids}
-            for i, (a, b) in enumerate(consts):
-                v = (a * sh + b) % modulus
-                cols[f"s{i}"] = pa.array(np.minimum.reduceat(v, sh_starts))
-            yield pa.RecordBatch.from_pydict(cols)
+            sigs = _minima(*_word_gram_hashes(batch.column(1), gram), consts, modulus)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), *sigs], names=[id_name] + [f"s{i}" for i in range(len(sigs))]
+            )
 
     return gen
 
@@ -196,108 +233,22 @@ def charfold_sig_gen(gram: int, a_consts, b_consts, modulus: int, id_name: str):
 def charfold_kgram_explode_gen(gram: int, passthrough: list[str]):
     """mapInArrow generator: (passthrough..., text) batches →
     (passthrough..., h) with one output row per k-gram shingle of each
-    input row (rows with fewer than ``gram`` tokens emit nothing —
-    the explode(kgram_hashes_from_hp) semantics)."""
+    input row (rows with fewer than ``gram`` tokens, and null texts,
+    emit nothing — the explode(kgram_hashes_from_hp) semantics)."""
 
     def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            tcol = batch.column(len(passthrough))
-            hp = _tokens_hp_arrow(tcol, np)
-            if hp is None:  # non-ASCII / nulls: per-object fallback
-                flat, nper = _batch_tokens(tcol.to_pylist())
-                h, p = _fold_flat_tokens(flat, np)
-            else:
-                h, p, nper = hp
-            sh, nsh = _kgram_hashes(h, p, nper, gram, np)
-            take = np.repeat(np.arange(n), nsh)
-            cols = {
-                name: batch.column(i).take(pa.array(take))
-                for i, name in enumerate(passthrough)
-            }
-            cols["h"] = pa.array(sh)
-            yield pa.RecordBatch.from_pydict(cols)
+            sh, nsh = _word_gram_hashes(batch.column(len(passthrough)), gram)
+            take = pa.array(np.repeat(np.arange(n), nsh))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(i).take(take) for i in range(len(passthrough))] + [pa.array(sh)],
+                names=[*passthrough, "h"],
+            )
 
     return gen
-
-
-def _char_gram_hashes(texts, k, np):
-    """charfold hash of every k-CHAR gram per text, replicating
-    ``charfold_gram_hashes_from_cps(char_codepoints(text), k)`` exactly:
-
-    - empty text: ``char_codepoints`` materializes the descending
-      ``sequence(1, 0)`` artifact ``[0, 0]`` whose single truncated
-      gram folds to 0 (probed against the expression form);
-    - 0 < len < k: ONE truncated gram = fold of the whole text;
-    - len >= k: the ``len-k+1`` rolling folds.
-
-    Returns (gh, nper, offs, null_docs): concatenated int64 gram
-    hashes, per-doc gram counts, per-doc start offsets into ``gh``,
-    and the indices of null texts. A null text contributes exactly ONE
-    gram slot holding a 0 sentinel the caller must surface as a NULL
-    value — the expression form's ``size(null) = -1`` (legacy
-    sizeOfNull) makes ``greatest(size(cps) - (k-1), 1)`` = 1, so a
-    null text yields a one-element array whose fold is null."""
-    n = len(texts)
-    lens = np.fromiter((len(t) if t is not None else -1 for t in texts), np.int64, n)
-    null_docs = np.nonzero(lens < 0)[0]
-    nper = np.maximum(lens - (k - 1), 1)  # null lens (-1) floor to 1 too
-    offs = np.zeros(n + 1, np.int64)
-    np.cumsum(nper, out=offs[1:])
-    gh = np.zeros(int(offs[-1]), np.int64)  # null docs keep the 0 sentinel
-    # short texts (len < k, including empty): one truncated fold each —
-    # a bounded Python loop over <= k-1 characters per doc
-    for i in np.nonzero((lens >= 0) & (lens < k))[0]:
-        acc = 0
-        for ch in texts[i]:
-            acc = (acc * 31 + ord(ch)) % CHARFOLD_MOD
-        gh[offs[i]] = acc
-    # full texts: width-bucketed UTF-32 matrices, k vectorized fold
-    # passes per bucket (same bucketing as _fold_flat_tokens)
-    maxw = int(lens.max()) if n else 0
-    lo = 0
-    for hi in _WIDTH_BUCKETS:
-        if lo >= maxw:
-            break
-        width = min(hi, maxw)
-        sel = np.nonzero((lens > lo) & (lens <= width) & (lens >= k))[0]
-        lo = hi
-        if sel.size == 0:
-            continue
-        sub = np.array([texts[i] for i in sel], dtype=f"U{width}")
-        cp = sub.view(np.uint32).reshape(sel.size, -1).astype(np.int64)
-        tail = cp.shape[1] - (k - 1)
-        g = cp[:, :tail] % CHARFOLD_MOD
-        for j in range(1, k):
-            g = (g * 31 + cp[:, j : tail + j]) % CHARFOLD_MOD
-        for row, i in enumerate(sel):
-            cnt = lens[i] - (k - 1)
-            gh[offs[i] : offs[i] + cnt] = g[row, :cnt]
-    return gh, nper, offs, null_docs
-
-
-def _segment_unique(vals, nper, np):
-    """Per-document sorted-distinct of a concatenated value array:
-    returns (vals2, counts) where each doc's segment of ``vals2`` is
-    its distinct values in ascending order. Consumers are set-shaped
-    (joins / intersections / explodes), so the order change vs
-    array_distinct's first-occurrence order is value-invisible."""
-    n = len(nper)
-    doc_idx = np.repeat(np.arange(n, dtype=np.int64), nper)
-    order = np.lexsort((vals, doc_idx))
-    v2, d2 = vals[order], doc_idx[order]
-    if len(v2):
-        keep = np.empty(len(v2), bool)
-        keep[0] = True
-        keep[1:] = (v2[1:] != v2[:-1]) | (d2[1:] != d2[:-1])
-        v2, d2 = v2[keep], d2[keep]
-    counts = np.bincount(d2, minlength=n).astype(np.int64)
-    return v2, counts
 
 
 def char_gram_items_gen(k: int, id_name: str):
@@ -305,33 +256,15 @@ def char_gram_items_gen(k: int, id_name: str):
     ``_arr`` is the distinct charfold k-char-gram hash set of the text
     (ascending order; the expression form's array_distinct keeps
     first-occurrence order, but every consumer is set-shaped). A null
-    text yields the expression form's ``[null]`` one-element array
-    (size(null) = -1 floors the gram count at one, and that gram's
-    fold is null)."""
+    text yields the expression form's ``[null]`` one-element array."""
 
     def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            texts = batch.column(1).to_pylist()
-            gh, nper, _, null_docs = _char_gram_hashes(texts, k, np)
-            v2, counts = _segment_unique(gh, nper, np)
-            offsets = np.zeros(n + 1, np.int64)
-            np.cumsum(counts, out=offsets[1:])
-            if null_docs.size:
-                vmask = np.zeros(len(v2), bool)
-                vmask[offsets[null_docs]] = True  # each null doc: 1 slot
-                values = pa.array(v2, pa.int64(), mask=vmask)
-            else:
-                values = pa.array(v2, pa.int64())
+            offsets, values = _distinct_lists(*_char_gram_hashes(batch.column(1), k))
             arr = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), arr], names=[id_name, "_arr"]
-            )
+            yield pa.RecordBatch.from_arrays([batch.column(0), arr], names=[id_name, "_arr"])
 
     return gen
 
@@ -339,58 +272,29 @@ def char_gram_items_gen(k: int, id_name: str):
 def winnow_fp_gen(k: int, w: int, id_name: str):
     """mapInArrow generator: (id, text) → (id, fp) — the distinct
     winnowed fingerprints (min charfold k-gram hash per w-gram window,
-    trailing windows clamped, fewer-than-w-gram docs emit their single
-    whole-array min), one output row per (doc, fingerprint). Matches
+    fewer-than-w-gram docs emit their single whole-array min), one
+    output row per (doc, fingerprint). Matches
     ``explode(array_distinct(transform(sequence(1, max(ng-w+1, 1)),
     j -> array_min(slice(g, j, w)))))`` value-for-value, including the
     one NULL-fp row a null text emits (its [null] gram array's single
     window min is null)."""
 
     def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            texts = batch.column(1).to_pylist()
-            gh, nper, offs, null_docs = _char_gram_hashes(texts, k, np)
-            nwin = np.maximum(nper - (w - 1), 1)
-            wm = np.empty(int(nwin.sum()), np.int64)
-            wpos = np.zeros(n + 1, np.int64)
-            np.cumsum(nwin, out=wpos[1:])
-            # docs with >= w grams: full windows via shifted minima on
-            # the flat array (window j never crosses a doc boundary:
-            # j + w - 1 stays inside the doc's gram segment)
-            full = np.nonzero(nper >= w)[0]
-            if full.size:
-                tail = len(gh) - (w - 1)
-                acc = gh[:tail].copy()
-                for j in range(1, w):
-                    np.minimum(acc, gh[j : tail + j], out=acc)
-                cnt = nper[full] - (w - 1)
-                starts = np.zeros(full.size, np.int64)
-                np.cumsum(cnt[:-1], out=starts[1:])
-                total = int(cnt.sum())
-                idx = np.repeat(offs[full] - starts, cnt) + np.arange(total)
-                out_idx = np.repeat(wpos[full] - starts, cnt) + np.arange(total)
-                wm[out_idx] = acc[idx]
-            # docs with 1..w-1 grams: one clamped window = min of all
-            for i in np.nonzero((nper > 0) & (nper < w))[0]:
-                wm[wpos[i]] = gh[offs[i] : offs[i] + nper[i]].min()
-            v2, counts = _segment_unique(wm, nwin, np)
-            out_offs = np.zeros(n + 1, np.int64)
-            np.cumsum(counts, out=out_offs[1:])
-            if null_docs.size:
-                vmask = np.zeros(len(v2), bool)
-                vmask[out_offs[null_docs]] = True  # each null doc: 1 row
-                fp = pa.array(v2, pa.int64(), mask=vmask)
-            else:
-                fp = pa.array(v2, pa.int64())
-            ids = batch.column(0).take(
-                pa.array(np.repeat(np.arange(n, dtype=np.int64), counts))
+            gh, ng, nulls = _char_gram_hashes(batch.column(1), k)
+            starts = np.cumsum(ng) - ng
+            wm, nwin = _windows(
+                gh,
+                ng,
+                w,
+                lambda acc, s: np.minimum(acc, gh[s]),
+                short=lambda m: np.minimum.reduceat(gh, starts)[m],
             )
+            offsets, fp = _distinct_lists(wm, nwin, nulls)
+            ids = batch.column(0).take(pa.array(np.repeat(np.arange(n), np.diff(offsets))))
             yield pa.RecordBatch.from_arrays([ids, fp], names=[id_name, "fp"])
 
     return gen
@@ -399,23 +303,17 @@ def winnow_fp_gen(k: int, w: int, id_name: str):
 def charfold_strings_gen(out: str = "_th"):
     """mapInArrow generator: (key, s) → (key, out) with ``out`` =
     charfold_hash(s) — the per-string polynomial fold vectorized over
-    the batch (width-bucketed UTF-32 matrices). Value-identical to the
-    expression form, including charfold_hash('') = 0 (the empty
-    string's [0, 0] codepoint artifact folds to 0, which equals the
-    kernel's empty fold). The key column passes through untouched."""
+    the batch. Value-identical to the expression form, including
+    charfold_hash('') = 0 (the empty string's [0, 0] codepoint artifact
+    folds to 0) and NULL for a null string. The key column passes
+    through untouched."""
 
     def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            vals = batch.column(1).to_pylist()
-            h, _ = _fold_flat_tokens(vals, np)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(h, pa.int64())],
-                names=[batch.schema.names[0], out],
-            )
+            cp, starts, lens, valid = _code_points(batch.column(1))
+            h = pa.array(_fold(cp, starts, lens)[0], pa.int64(), mask=~valid)
+            yield pa.RecordBatch.from_arrays([batch.column(0), h], names=[batch.schema.names[0], out])
 
     return gen

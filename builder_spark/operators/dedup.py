@@ -69,6 +69,10 @@ _MULTS = [
 #: no long overflow under Spark's default ANSI arithmetic.
 _P = 2147483647
 
+#: Word-shingle width of MinHash and SimHash: a document's features are
+#: its runs of this many consecutive tokens.
+SHINGLE_WORDS = 3
+
 #: Prefix-filter threshold slack: the round-4 acceptance granularity
 #: (see the module docstring).
 _TAU_SLACK = 5e-5
@@ -81,105 +85,44 @@ def _perm_consts(i: int) -> tuple[int, int]:
     return a, b
 
 
-def _perm(h, i: int):
-    a, b = _perm_consts(i)
-    return F.pmod(F.lit(a) * h + F.lit(b), F.lit(_P))
-
-
-def _minhash_sig_gen(k: int, shingle_words: int, id_name: str):
-    """mapInArrow generator for MinHash signatures over token-hash
-    arrays — the per-batch numpy kernel behind
-    :func:`minhash_signatures`.
-
-    Input batches: (id, _th: list<int64>) where _th[j] =
-    pmod(xxhash64(token_j), _P), pre-filtered to ≥ ``shingle_words``
-    tokens. Output: (id, sig_0..sig_{k-1}), bit-identical to the
-    expression form array_min(transform(shingles, h_i)) — the shingle
-    combine (acc = (acc·31 + th·37) mod P) and the k affine
-    permutations are exact int64 arithmetic in both engines
-    (intermediates < 2^62), and min over the shingle MULTISET equals
-    min over the distinct set, so the old array_distinct is dropped
-    without changing a single signature value.
-
-    Everything is vectorized across the whole batch: shingle hashes
-    via ``shingle_words`` strided passes over the concatenated token
-    hashes, per-permutation minima via ``np.minimum.reduceat`` on doc
-    offsets — one C-speed pass per permutation instead of one
-    interpreted-lambda evaluation per (shingle × permutation)
-    (guide-§4.2 shape: Spark moves the columns, numpy does the math;
-    measured 91 CPU-s → <2 CPU-s on the q_dedup_fuzzy signature stage
-    at sf0.1)."""
-    consts = [_perm_consts(i) for i in range(k)]
-
-    def gen(batches):
-        for batch in batches:
-            ids = batch.column(0)
-            lc = batch.column(1)
-            n = len(ids)
-            if n == 0:
-                continue
-            offs = lc.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = lc.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            nper = np.diff(offs)  # tokens per doc (all >= shingle_words)
-            nsh = nper - (shingle_words - 1)  # shingles per doc (all >= 1)
-            # shingle hash at global token position i:
-            #   acc = th[i]; acc = (acc*31 + th[i+j]*37) % P  (j = 1..w-1)
-            tail = len(vals) - (shingle_words - 1)
-            acc = vals[:tail].copy()
-            for j in range(1, shingle_words):
-                acc = (acc * 31 + vals[j : tail + j] * 37) % _P
-            # gather the in-doc shingle positions (cross-doc strides in
-            # `acc` are skipped by construction of idx)
-            total = int(nsh.sum())
-            sh_starts = np.zeros(n, np.int64)
-            np.cumsum(nsh[:-1], out=sh_starts[1:])
-            idx = np.repeat(offs[:-1] - sh_starts, nsh) + np.arange(total)
-            sh = acc[idx]
-            cols = {id_name: ids}
-            for i, (a, b) in enumerate(consts):
-                v = (a * sh + b) % _P
-                cols[f"sig_{i}"] = pa.array(np.minimum.reduceat(v, sh_starts))
-            yield pa.RecordBatch.from_pydict(cols)
-
-    return gen
-
-
 def exact_dedup(df: DataFrame, key: str, order_col: str) -> DataFrame:
     """Keep the first row (min order_col) per duplicate key."""
     w = Window.partitionBy(key).orderBy(F.col(order_col).asc())
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 16, shingle_words: int = 3
-) -> DataFrame:
-    """(id, sig_0..sig_{k-1}): deterministic MinHash signature per doc.
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str, k: int = 16) -> DataFrame:
+    """(id, sig_0..sig_{k-1}): deterministic MinHash signature per doc
+    over :data:`SHINGLE_WORDS`-token shingles.
 
     The token→hash step (xxhash64, codegen'd) stays JVM-side; the
     shingle combine and the k permutation-min passes run as a
     vectorized numpy kernel in one ``mapInArrow`` stage
-    (:func:`_minhash_sig_gen`) — output bit-identical to the previous
-    pure-expression form (sig_i = array_min(transform(shingles, h_i)))
-    but ~50× less signature-stage CPU at sf0.1: HOF lambdas are
-    interpreted per (shingle × permutation), numpy does one C pass per
-    permutation over the whole batch. Only (id, token hashes) cross
-    the Python boundary, as Arrow batches; no shuffle is touched.
-    Docs with fewer tokens than ``shingle_words`` have no shingles and
-    are dropped, matching the old explode semantics.
+    (``arrowkern.token_hash_sig_gen``) — output bit-identical to the
+    pure-expression form sig_i = array_min(transform(shingles, h_i))
+    (pinned by tests/test_chargram_kernel.py) but ~50× less
+    signature-stage CPU at sf0.1: HOF lambdas are interpreted per
+    (shingle × permutation), numpy does one C pass per permutation over
+    the whole batch. Only (id, token hashes) cross the Python boundary,
+    as Arrow batches; no shuffle is touched. Docs with fewer than
+    :data:`SHINGLE_WORDS` tokens have no shingles and are dropped.
     """
+    from builder_spark.operators.arrowkern import token_hash_sig_gen
+
     toks = tokens(text_col)
     th = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(_P)))
     # Shingle-less docs are dropped HERE, on the cheap token count —
     # the kernel assumes ≥1 shingle per row.
     pre = (
         spread(df, id_col)
-        .filter(F.size(tokens(text_col)) >= shingle_words)
+        .filter(F.size(toks) >= SHINGLE_WORDS)
         .select(F.col(id_col), th.alias("_th"))
     )
     out_schema = StructType(
         [pre.schema[id_col]] + [StructField(f"sig_{i}", LongType()) for i in range(k)]
     )
-    sigs = pre.mapInArrow(_minhash_sig_gen(k, shingle_words, id_col), out_schema)
+    consts = [_perm_consts(i) for i in range(k)]
+    sigs = pre.mapInArrow(token_hash_sig_gen(consts, SHINGLE_WORDS, id_col), out_schema)
     # the LSH banding self-joins this kernel output: a repartition
     # boundary re-ran the kernel per consumer (measured: 2 executions
     # for q_dedup_fuzzy, 4 for q_minhash_banded); k longs per doc
@@ -533,25 +476,21 @@ def kgram_hashes_from_hp(hp_col, k: int = 3) -> "F.Column":
     return F.transform(idx, shingle)
 
 
-def simhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS, shingle_words: int = 3
-) -> DataFrame:
-    """(id, simhash): ``bits``-bit SimHash over distinct word shingles.
+def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, simhash): :data:`SIMHASH_BITS`-bit SimHash over distinct
+    :data:`SHINGLE_WORDS`-word shingles.
 
     Classic Charikar construction: each shingle votes +1/-1 per bit of
     its hash; signature bit i is set iff the summed vote is positive.
     Shingles (not unigrams) are the feature set — on small-vocabulary
     corpora unigram sets are near-identical across documents and the
     signature stops discriminating. One explode + one groupBy(id) with
-    ``bits`` conditional-sum aggregates — map-side combined, shuffle is
-    ``bits`` longs per doc. Fully deterministic (charfold hash, no RNG).
+    one conditional-sum aggregate per bit — map-side combined, shuffle
+    is one long per bit per doc. Fully deterministic (charfold hash, no
+    RNG).
     """
-    if shingle_words > 1:
-        proj, feats = word_shingles(text_col, shingle_words)
-        src = spread(df, id_col).select(F.col(id_col), proj)
-    else:
-        feats = F.array_distinct(tokens(text_col))
-        src = spread(df, id_col)
+    proj, feats = word_shingles(text_col, SHINGLE_WORDS)
+    src = spread(df, id_col).select(F.col(id_col), proj)
     # r15: the per-shingle string fold runs in a numpy mapInArrow
     # kernel (charfold_hash is an interpreted double-HOF per shingle —
     # millions of per-char expression walks at sf0.1); value-identical
@@ -570,41 +509,35 @@ def simhash_signatures(
             F.sum(
                 F.when(F.shiftright("_th", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"_v{i}")
-            for i in range(bits)
+            for i in range(SIMHASH_BITS)
         ]
     )
     sig = None
-    for i in range(bits):
+    for i in range(SIMHASH_BITS):
         term = F.when(F.col(f"_v{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
     return votes.select(F.col(id_col), sig.cast("long").alias("simhash"))
 
 
-def simhash_near_dupes(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 8,
-    bits: int = SIMHASH_BITS,
-    bands: int = SIMHASH_BANDS,
-) -> DataFrame:
+def simhash_near_dupes(df: DataFrame, id_col: str, text_col: str, max_hamming: int = 8) -> DataFrame:
     """Near-dup pairs (id_a < id_b, hamming ≤ max_hamming) via SimHash.
 
     Candidate generation is banded like MinHash-LSH: the signature is
-    cut into ``bands`` equal bit-slices and pairs must agree exactly on
-    ≥1 slice — a join on (band, slice-value), never all-pairs. Exact
-    Hamming distance (bit_count of xor) then filters candidates.
+    cut into :data:`SIMHASH_BANDS` equal bit-slices and pairs must agree
+    exactly on ≥1 slice — a join on (band, slice-value), never
+    all-pairs. Exact Hamming distance (bit_count of xor) then filters
+    candidates.
     At 100 TB: the band join is the only shuffle, keyed on small ints.
     """
-    rpb = bits // bands
+    rpb = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << rpb) - 1
     # the band self-join and the two signature rejoins consume sigs;
     # one kernel run, one long per doc
-    sigs = materialize(simhash_signatures(df, id_col, text_col, bits=bits))
+    sigs = materialize(simhash_signatures(df, id_col, text_col))
     cand = band_candidates(
         sigs,
         id_col,
-        [F.shiftright("simhash", b * rpb).bitwiseAND(F.lit(mask)) for b in range(bands)],
+        [F.shiftright("simhash", b * rpb).bitwiseAND(F.lit(mask)) for b in range(SIMHASH_BANDS)],
     )
     xor = F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
     return (
@@ -653,18 +586,13 @@ WINNOW_K = 5  # character-gram size
 WINNOW_W = 4  # winnowing window (grams per window)
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Winnowed rolling-hash fingerprints per document (Schleimer,
     Wilkerson, Aiken 2003 — the MOSS algorithm): hash every k-char
-    gram, slide a w-gram window, keep each window's minimum hash.
-    Guarantees every match of length ≥ k+w-1 shares a fingerprint
-    while storing only ~2/(w+1) of the gram hashes.
+    gram, slide a w-gram window, keep each window's minimum hash
+    (k = :data:`WINNOW_K`, w = :data:`WINNOW_W`). Guarantees every
+    match of length ≥ k+w-1 shares a fingerprint while storing only
+    ~2/(w+1) of the gram hashes.
 
     Returns (id, fp) with distinct fingerprints per document.
 
@@ -696,24 +624,19 @@ def winnow_fingerprints(
     return (
         spread(df, id_col)
         .select(F.col(id_col), F.col(text_col) if isinstance(text_col, str) else text_col)
-        .mapInArrow(winnow_fp_gen(k, w, id_col), f"{id_col} long, fp long")
+        .mapInArrow(winnow_fp_gen(WINNOW_K, WINNOW_W, id_col), f"{id_col} long, fp long")
     )
 
 
 def winnow_containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_containment: float = 0.5,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
+    df: DataFrame, id_col: str, text_col: str, min_containment: float = 0.5
 ) -> DataFrame:
     """Near-dup/containment pairs from shared winnowed fingerprints:
     (id_a, id_b, shared_fp, containment) where containment =
     shared_fp / min(|fp_a|, |fp_b|) — the plagiarism-detection metric
     (robust when one doc embeds the other). The fingerprint sets go
     through :func:`containment_pairs`."""
-    fps = winnow_fingerprints(df, id_col, text_col, k=k, w=w)
+    fps = winnow_fingerprints(df, id_col, text_col)
     # the prefix ranking, the full fingerprint stream and both
     # verification rejoins all sit above the fingerprint kernel; one
     # kernel run, one fingerprint array per doc

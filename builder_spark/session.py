@@ -2,10 +2,10 @@
 
 Scale posture (100 TB / 1000-executor cluster): AQE on for runtime
 re-planning (partition coalescing, skew-join splitting, broadcast
-demotion/promotion); shuffle partitions sized for the local harness but
-overridable via env; UTC session timezone so timestamp_ntz semantics are
-stable; ``nanosAsLong`` because the events table ships parquet
-TIMESTAMP(NANOS) which Spark 4.x refuses by default (SURVEY.md §1.3).
+demotion/promotion); a fixed 32 shuffle partitions that AQE coalesces
+at runtime; UTC session timezone so timestamp_ntz semantics are stable;
+``nanosAsLong`` because the events table ships parquet TIMESTAMP(NANOS)
+which Spark 4.x refuses by default (SURVEY.md §1.3).
 """
 
 from __future__ import annotations
@@ -61,11 +61,10 @@ def get_spark(app_name: str = "builder-spark") -> SparkSession:
     still apply.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

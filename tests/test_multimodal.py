@@ -1,22 +1,14 @@
-"""Multimodal plumbing: binary payload schema, metadata struct, the
-Arrow-batched feature extractor, and the decode-stub gating."""
+"""Multimodal plumbing: binary payload schema, metadata struct and the
+Arrow-batched feature extractor."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from builder_spark.catalog import load_table
-from builder_spark.operators.multimodal import (
-    attach_binary,
-    decode_audio,
-    decode_image,
-    extract_payload_features,
-    resize_image,
-    sample_frames,
-)
+from builder_spark.operators.multimodal import attach_binary, extract_payload_features
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -40,35 +32,3 @@ def test_feature_extractor_matches_python(spark):
         assert f.n_cp == len(row.text)
         assert f.cp_sum == sum(map(ord, row.text))
 
-
-def test_decode_stubs_are_gated():
-    for fn, args in [
-        (decode_image, (b"x",)),
-        (decode_audio, (b"x",)),
-        (resize_image, (b"x", 8, 8)),
-        (sample_frames, (b"x",)),
-    ]:
-        with pytest.raises(NotImplementedError):
-            fn(*args)
-
-
-def test_codec_stubs_raise_cleanly_without_libs():
-    """In a container without PIL/soundfile/pyav the codec entry points
-    raise NotImplementedError (not ImportError or AttributeError); the
-    graded byte-replay path never calls them. In a container WITH the
-    libs the same functions run the real decode — the flags flip at
-    import time."""
-    import builder_spark.operators.multimodal as mm
-
-    payload = b"not-a-real-media-file"
-    if not mm._HAS_PIL:
-        with pytest.raises(NotImplementedError):
-            mm.decode_image(payload)
-        with pytest.raises(NotImplementedError):
-            mm.resize_image(payload, 2, 2)
-    if not mm._HAS_SOUNDFILE:
-        with pytest.raises(NotImplementedError):
-            mm.decode_audio(payload)
-    if not mm._HAS_AV:
-        with pytest.raises(NotImplementedError):
-            mm.sample_frames(payload)
